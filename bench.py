@@ -145,10 +145,11 @@ def time_clips_validation(spark, paths: dict, rows: int, cores: int, repeats: in
         # materialize every output the engine contract produces,
         # SEQUENTIALLY. Round 4 overlapped the metadata-only actions
         # with the decode stage on driver threads; the round-5
-        # decomposition (tools/scaling_decompose.py) measured that
-        # concurrency REGRESSING both pinned levels — 8-core warm wall
-        # 32.3s sequential vs 67.2s concurrent, process-tree CPU 230s
-        # vs 323s — scheduler/GC contention against the saturated
+        # per-phase decomposition (BENCH.md; per-layer spans today
+        # come from `perfbench/run.py --workload clips_full --trace 1`)
+        # measured that concurrency REGRESSING both pinned levels —
+        # 8-core warm wall 32.3s sequential vs 67.2s concurrent,
+        # process-tree CPU 230s vs 323s — scheduler/GC contention against the saturated
         # decode stage costs far more than the overlap recovers. The
         # decode stage itself scales 4.09x from 2 to 8 cores; the
         # post-decode actions are each sub-second against the warm

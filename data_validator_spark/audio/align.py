@@ -21,22 +21,19 @@ The reference's failure messages echo the offending value
 `audio_misaligned(lag=320,aligned_snr=58.2)`.
 
 Scale design: the cross-correlation is ONE rFFT pair + irfft per clip
-(O(n log n), vectorized numpy), inside the same iterator pandas-UDF
-shape as audio/checks.py; only (lag, snr) scalars leave the UDF.
+(O(n log n), vectorized numpy), an analyzer on the shared decode core
+(checks.make_decode_udf); only (lag, snr) scalars leave the UDF.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from data_validator_spark.audio import codecs, synth
+from data_validator_spark.audio.checks import make_decode_udf
 
 ALIGNED_SNR_MIN_DB = 30.0
 
@@ -77,62 +74,31 @@ def aligned_snr(x: np.ndarray, r: np.ndarray, lag: int) -> float:
     return codecs.snr_db(b.astype(np.float64), a.astype(np.float64))
 
 
-_SCHEMA = T.StructType(
-    [
-        T.StructField("decode_error", T.StringType()),
-        T.StructField("lag_samples", T.IntegerType()),
-        T.StructField("raw_snr_db", T.DoubleType()),
-        T.StructField("aligned_snr_db", T.DoubleType()),
-    ]
-)
+_FIELDS = [
+    ("lag_samples", T.IntegerType(), 0),
+    ("raw_snr_db", T.DoubleType(), np.nan),
+    ("aligned_snr_db", T.DoubleType(), np.nan),
+]
 
 
 def make_align_udf(max_lag_ms: int = 100, plugins: dict | None = None):
     """Decode + alignment pandas UDF. The reference signal is the
     deterministic synth recipe at the DECODED sample rate and the
     payload's own length plus the lag search margin — the identical
-    oracle signal checks._check_batch compares against."""
+    oracle signal the decode-check UDF's SNR compares against."""
 
-    @pandas_udf(_SCHEMA)
-    def _align_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            err = np.full(n, None, dtype=object)
-            lag = np.zeros(n, dtype=np.int32)
-            raw = np.full(n, np.nan)
-            ali = np.full(n, np.nan)
-            ids = pdf["clip_id"].to_numpy()
-            codec_col = pdf["codec"].to_numpy()
-            payloads = pdf["bytes"].to_numpy()
-            for i in range(n):
-                try:
-                    pcm, sr = codecs.decode(
-                        codec_col[i], payloads[i], plugins=plugins
-                    )
-                except codecs.CodecError as e:
-                    err[i] = str(e)
-                    continue
-                max_lag = max(1, int(sr * max_lag_ms / 1000))
-                ref = synth.reference_pcm(
-                    str(ids[i]), int(sr), len(pcm) + max_lag
-                )
-                raw[i] = codecs.snr_db(ref[: len(pcm)], pcm)
-                k = best_lag(pcm, ref, max_lag)
-                lag[i] = k
-                ali[i] = aligned_snr(pcm, ref, k)
-            yield pd.DataFrame(
-                {
-                    "decode_error": err,
-                    "lag_samples": lag,
-                    "raw_snr_db": raw,
-                    "aligned_snr_db": ali,
-                }
-            )
+    def analyze(row: codecs.DecodedRow) -> dict:
+        pcm, sr = row.pcm, row.sr
+        max_lag = max(1, int(sr * max_lag_ms / 1000))
+        ref = synth.reference_pcm(str(row.clip_id), int(sr), len(pcm) + max_lag)
+        k = best_lag(pcm, ref, max_lag)
+        return {
+            "lag_samples": k,
+            "raw_snr_db": codecs.snr_db(ref[: len(pcm)], pcm),
+            "aligned_snr_db": aligned_snr(pcm, ref, k),
+        }
 
-    return _align_udf
-
-
-align_udf = make_align_udf()
+    return make_decode_udf(_FIELDS, analyze, plugins)
 
 
 def align_report(
@@ -151,11 +117,7 @@ def align_report(
       NULL  decode failed (decode_error says why) or clip is aligned
           and passing
     """
-    udf = (
-        make_align_udf(max_lag_ms, plugins)
-        if plugins or max_lag_ms != 100
-        else align_udf
-    )
+    udf = make_align_udf(max_lag_ms, plugins)
     res = udf(F.struct(F.col("clip_id"), F.col("codec"), F.col("bytes")))
     out = clips.withColumn("_align", res)
     lag = F.col("_align.lag_samples")

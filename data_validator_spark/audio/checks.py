@@ -7,21 +7,34 @@ Python UDFs — SURVEY.md §2.11) with a minimal input projection:
 (clip_id, codec, sr_hz, bytes). Everything downstream of the UDF
 (labels, tiers, message appends) is Column expressions.
 
+One decode loop: every audio UDF (this check, the fused quality
+pass, align/loudness/embedding/resample reports, and segment_clips'
+fan-out) decodes through codecs.decode_rows, and every UDF but
+segmentation is built by make_decode_udf from a field list plus a
+per-row analyzer. The core keeps these invariants for all of them:
+  - skip rows: a true `skip` column passes the row through with every
+    field at its fill value and NO decode attempt
+  - metadata tier: PcmUnsupportedError falls back to the container
+    inspector only where inspectors are passed (the check UDF always
+    passes them); elsewhere it is decode_error text
+  - sentinels: fields the analyzer did not fill keep their declared
+    fill value (container_sr/n_samples -1, lag 0, NaN, NULL), and a
+    CodecError from decode or analysis becomes decode_error text,
+    never a task failure
+  - batch size: session.py caps Arrow batches (and the parquet
+    columnar reader) at 512 rows so a batch of `bytes` payloads fits
+    executor memory; each batch is released before the next
+
 Scale notes:
-  - Arrow batch size is capped session-wide (session.py caps both
-    spark.sql.execution.arrow.maxRecordsPerBatch and the parquet
-    columnar reader batch at 512 rows) so a batch of `bytes` payloads
-    fits executor memory.
   - decode parallelism is decoupled from file layout: callers
     repartition before this stage (plans/validation.py uses a
     deterministic repartition so task retries are stable).
-  - per-row work is O(samples); the UDF releases each batch promptly
-    (no accumulation across batches).
+  - per-row work is O(samples).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -31,119 +44,139 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from data_validator_spark.audio import codecs, synth
+from data_validator_spark.audio.quality import (
+    _FEATURE_FIELDS,
+    CLIPPING_MAX_RATIO,
+    DC_OFFSET_MAX,
+    SILENCE_MAX_RATIO,
+    analyze_pcm,
+    quality_labels_expr,
+)
 
 SNR_MIN_DB = 30.0
 
-# explicit StructType: a DDL string would be parsed at import time and
-# require an active SparkSession
-_RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("decode_error", T.StringType()),
-        T.StructField("snr_db", T.DoubleType()),
-        T.StructField("container_sr", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("pcm_unsupported", T.BooleanType()),
-    ]
-)
+# (name, Spark type, fill value): the fill is what a row carries when
+# it was skipped, failed to decode, or the analyzer left it unset;
+# its Python type fixes the numpy column dtype
+Field = tuple[str, T.DataType, object]
+Analyzer = Callable[[codecs.DecodedRow], dict]
+
+_CHECK_FIELDS: list[Field] = [
+    ("snr_db", T.DoubleType(), np.nan),
+    ("container_sr", T.IntegerType(), -1),
+    ("n_samples", T.LongType(), -1),
+    ("pcm_unsupported", T.BooleanType(), False),
+]
+
+
+def make_decode_udf(
+    fields: list[Field],
+    analyze: Analyzer,
+    plugins: dict | None = None,
+    inspectors: dict | None = None,
+):
+    """Iterator pandas UDF: struct(clip_id, codec, bytes[, skip, ...])
+    -> struct(decode_error, *fields), one output row per input row.
+    `analyze(row)` runs once per decoded row (codecs.DecodedRow) and
+    returns {field: value}; a CodecError it raises becomes the row's
+    decode_error. `plugins`/`inspectors` ride the closure to every
+    python worker — the same serialization path as all user code — so
+    native decoders and container inspectors plug in per call with no
+    engine edit."""
+    schema = T.StructType(
+        [T.StructField("decode_error", T.StringType())]
+        + [T.StructField(name, dt) for name, dt, _ in fields]
+    )
+
+    @pandas_udf(schema)
+    def _decode_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            n = len(pdf)
+            err = np.full(n, None, dtype=object)
+            cols = {name: np.full(n, fill) for name, _, fill in fields}
+            for row in codecs.decode_rows(pdf, plugins, inspectors):
+                if row.error is not None:
+                    err[row.i] = row.error
+                    continue
+                try:
+                    vals = analyze(row)
+                except codecs.CodecError as e:  # e.g. a failed re-encode
+                    err[row.i] = str(e)
+                    continue
+                for name, v in vals.items():
+                    cols[name][row.i] = v
+            out = {"decode_error": err}
+            for name, dt, _ in fields:
+                # nullable Int32 refuses out-of-range ints, never wraps
+                out[name] = (
+                    pd.array(cols[name], dtype="Int32")
+                    if isinstance(dt, T.IntegerType)
+                    else cols[name]
+                )
+            yield pd.DataFrame(out)
+
+    return _decode_udf
+
+
+def _metadata_outcome(meta: dict) -> dict:
+    """Metadata-tier pass (PCM decode unsupported, e.g. opus without
+    libopus; the REAL container inspection passed): pcm_unsupported,
+    container_sr from the container's declared rate, and n_samples
+    implied by its declared duration, so duration-consistency checks
+    stay real. snr_db stays null; the caller surfaces
+    audio_codec_unsupported_pcm(<codec>)."""
+    out = {"pcm_unsupported": True}
+    in_sr = meta.get("input_sr") or 0
+    if in_sr > 0:
+        out["container_sr"] = in_sr
+        if meta.get("duration_ms") is not None:
+            out["n_samples"] = int(round(meta["duration_ms"] / 1000.0 * in_sr))
+    return out
 
 
 def make_audio_check_udf(
-    plugins: dict | None = None, inspectors: dict | None = None
-):
-    """Build the decode-check pandas UDF, optionally closing over
-    `plugins` (codec -> decode callable) and `inspectors` (codec ->
-    metadata-inspect callable): the dicts ride the UDF closure to
-    every python worker — the same serialization path as all user
-    code — so native decoders (libopus/libflac) and container
-    inspectors plug in per-call with zero engine edits and no
-    worker-side imports."""
-
-    @pandas_udf(_RESULT_SCHEMA)
-    def _audio_check_udf(
-        it: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield _check_batch(pdf, plugins, inspectors)
-
-    return _audio_check_udf
-
-
-def _check_batch(
-    pdf: pd.DataFrame,
-    plugins: dict | None,
+    plugins: dict | None = None,
     inspectors: dict | None = None,
-) -> pd.DataFrame:
-    """Batch body of the decode-check UDF: struct(clip_id, codec,
-    sr_hz, bytes, skip) batch -> (decode_error, snr_db, container_sr,
-    n_samples, pcm_unsupported).
+    quality: bool = False,
+    embed_mels: int | None = None,
+):
+    """Build the decode-check UDF: struct(clip_id, codec, sr_hz, bytes,
+    skip) -> (decode_error, snr_db, container_sr, n_samples,
+    pcm_unsupported), plus every quality feature when `quality` and
+    the log-mel `embedding` (audio/features.py, 2*embed_mels floats)
+    when `embed_mels` — all from ONE decode per row, so a pipeline
+    gating on the invariant, quality and content dedup pays a single
+    pass over the payload column. The metadata tier is always on."""
+    fields = list(_CHECK_FIELDS)
+    if quality:
+        fields += [(name, dt, np.nan) for name, dt in _FEATURE_FIELDS]
+    if embed_mels:
+        from data_validator_spark.audio.features import log_mel_embedding
 
-    skip=True rows pass through with all-null outcomes and NO decode
-    attempt: the caller uses this for rows already diverted by a
-    non-payload hard rule, so their payloads ride the one scan (their
-    null-mask is still observed JVM-side) without costing any Python
-    decode time.
+        fields.append(("embedding", T.ArrayType(T.FloatType()), None))
 
-    Metadata-tier codecs (PCM decode unsupported in-environment, e.g.
-    opus without libopus): the REAL container inspection still runs —
-    a malformed container is a decode_error exactly like any other
-    corrupt payload — and a structurally-sound stream passes through
-    with pcm_unsupported=True, container_sr from the container's
-    declared rate, and n_samples implied by the container's declared
-    duration (so duration-consistency checks stay real). snr_db stays
-    null; the caller surfaces audio_codec_unsupported_pcm(<codec>)."""
-    n = len(pdf)
-    err = np.full(n, None, dtype=object)
-    snr = np.full(n, np.nan)
-    csr = np.full(n, -1, dtype=np.int64)
-    nsm = np.full(n, -1, dtype=np.int64)
-    unsup = np.zeros(n, dtype=bool)
-    clip_ids = pdf["clip_id"].to_numpy()
-    codecs_col = pdf["codec"].to_numpy()
-    payloads = pdf["bytes"].to_numpy()
-    skips = pdf["skip"].to_numpy()
-    for i in range(n):
-        if skips[i]:
-            continue
-        payload = payloads[i]
-        try:
-            pcm, sr = codecs.decode(codecs_col[i], payload, plugins=plugins)
-        except codecs.PcmUnsupportedError:
-            meta = codecs.inspect_metadata(
-                codecs_col[i], payload, inspectors=inspectors
-            )
-            if meta is None:
-                err[i] = "pcm decode unsupported, no metadata tier"
-            elif meta["error"] is not None:
-                err[i] = meta["error"]
-            else:
-                unsup[i] = True
-                in_sr = meta.get("input_sr") or 0
-                if in_sr > 0:
-                    csr[i] = in_sr
-                    if meta.get("duration_ms") is not None:
-                        nsm[i] = int(round(
-                            meta["duration_ms"] / 1000.0 * in_sr
-                        ))
-            continue
-        except codecs.CodecError as e:
-            err[i] = str(e)
-            continue
-        csr[i] = sr
-        nsm[i] = len(pcm)
-        ref = synth.reference_pcm(str(clip_ids[i]), int(sr), len(pcm))
-        snr[i] = codecs.snr_db(ref, pcm)
-    return pd.DataFrame(
-        {
-            "decode_error": err,
-            "snr_db": snr,
-            "container_sr": pd.array(csr, dtype="Int32"),
-            "n_samples": nsm,
-            "pcm_unsupported": unsup,
+    def analyze(row: codecs.DecodedRow) -> dict:
+        if row.pcm is None:
+            return _metadata_outcome(row.meta)
+        pcm, sr = row.pcm, row.sr
+        ref = synth.reference_pcm(str(row.clip_id), int(sr), len(pcm))
+        out = {
+            "container_sr": sr,
+            "n_samples": len(pcm),
+            "snr_db": codecs.snr_db(ref, pcm),
         }
-    )
+        if quality:
+            out.update(analyze_pcm(pcm, sr))
+        if embed_mels:
+            out["embedding"] = [
+                float(v) for v in log_mel_embedding(pcm, sr, embed_mels)
+            ]
+        return out
+
+    return make_decode_udf(fields, analyze, plugins, inspectors or {})
 
 
-# default instance (no plugins) — the common path and the public name
+# default instance (no plugins, quality off) — the public name
 audio_check_udf = make_audio_check_udf()
 
 
@@ -185,11 +218,10 @@ def run_audio_checks(
     The SNR label rounds to 1dp, echoing the offending value like the
     reference's `fast_rt_...s` labels (core_models.py:169-202).
 
-    quality=True swaps in the FUSED quality UDF (audio/quality.py):
-    the same single decode pass additionally yields the spectral/
-    level features and a `_quality_labels` soft-tier column — a
-    pipeline gating on both the invariant and quality never decodes
-    twice.
+    quality=True adds the spectral/level features (quality.analyze_pcm)
+    and a `_quality_labels` soft-tier column from the same single
+    decode pass — a pipeline gating on both the invariant and quality
+    never decodes twice.
     """
     if not quality:
         # these knobs only take effect on the fused quality pass —
@@ -212,22 +244,9 @@ def run_audio_checks(
                 f"{set_knobs} require quality=True"
             )
     skip = F.col(skip_col) if skip_col else F.lit(False)
-    if quality:
-        from data_validator_spark.audio import quality as _q
-
-        udf = (
-            _q.make_audio_quality_udf(
-                decoder_plugins, inspector_plugins, embed_mels
-            )
-            if decoder_plugins or inspector_plugins or embed_mels
-            else _q.audio_quality_udf
-        )
-    else:
-        udf = (
-            make_audio_check_udf(decoder_plugins, inspector_plugins)
-            if decoder_plugins or inspector_plugins
-            else audio_check_udf
-        )
+    udf = make_audio_check_udf(
+        decoder_plugins, inspector_plugins, quality, embed_mels
+    )
     res = udf(
         F.struct(
             F.col("clip_id"),
@@ -241,14 +260,6 @@ def run_audio_checks(
         "_audio", res
     )
     if quality:
-        from data_validator_spark.audio.quality import (
-            _FEATURE_FIELDS,
-            CLIPPING_MAX_RATIO,
-            DC_OFFSET_MAX,
-            SILENCE_MAX_RATIO,
-            quality_labels_expr,
-        )
-
         for name, _ in _FEATURE_FIELDS:
             out = out.withColumn(name, F.col(f"_audio.{name}"))
         if embed_mels:

@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import struct
 import zlib
+from typing import Iterator, NamedTuple
 
 import numpy as np
 
@@ -478,6 +479,64 @@ def decode(
         # arbitrary exception types; one bad payload must become a
         # decode_error ROW, never a task crash that kills the batch
         raise CodecError(f"{codec}: {e}") from e
+
+
+class DecodedRow(NamedTuple):
+    """One attempted row of a decode batch. Exactly one outcome holds:
+    `error` is set (decode failed), or `meta` is set (metadata tier
+    passed; `pcm`/`sr` None), or `pcm`/`sr` are set (decoded)."""
+
+    i: int
+    clip_id: object
+    pcm: np.ndarray | None
+    sr: int | None
+    error: str | None
+    meta: dict | None
+
+
+def decode_rows(
+    pdf, plugins: dict | None = None, inspectors: dict | None = None
+) -> Iterator[DecodedRow]:
+    """Decode every row of an Arrow batch (clip_id, codec, bytes[,
+    skip]) -> one DecodedRow per row attempted. The engine's only
+    decode loop: every audio UDF runs its per-row analysis on top.
+
+      - rows whose `skip` column is true are not attempted and yield
+        nothing (the column is optional)
+      - CodecError (incl. plugin exceptions wrapped by decode) becomes
+        `error` text, never an exception out of the batch
+      - PcmUnsupportedError runs the metadata tier only when the caller
+        passes `inspectors` (a dict, possibly empty: per-call
+        inspectors over the module registry); with inspectors=None it
+        is an ordinary decode error"""
+    clip_ids = pdf["clip_id"].to_numpy()
+    codec_col = pdf["codec"].to_numpy()
+    payloads = pdf["bytes"].to_numpy()
+    skips = pdf["skip"].to_numpy() if "skip" in pdf.columns else None
+    for i in range(len(pdf)):
+        if skips is not None and skips[i]:
+            continue
+        try:
+            pcm, sr = decode(codec_col[i], payloads[i], plugins=plugins)
+        except PcmUnsupportedError as e:
+            if inspectors is None:
+                yield DecodedRow(i, clip_ids[i], None, None, str(e), None)
+                continue
+            meta = inspect_metadata(
+                codec_col[i], payloads[i], inspectors=inspectors
+            )
+            if meta is None:
+                err = "pcm decode unsupported, no metadata tier"
+            else:
+                err = meta["error"]
+            yield DecodedRow(
+                i, clip_ids[i], None, None, err, meta if err is None else None
+            )
+            continue
+        except CodecError as e:
+            yield DecodedRow(i, clip_ids[i], None, None, str(e), None)
+            continue
+        yield DecodedRow(i, clip_ids[i], pcm, sr, None, None)
 
 
 def snr_db(reference: np.ndarray, decoded: np.ndarray) -> float:

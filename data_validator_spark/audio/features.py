@@ -21,22 +21,19 @@ The vector slots directly into the existing similarity tier
 screen): cosine(same content re-encoded) ~ 0.99+, cosine(different
 clips) well below — measured margins are pinned by the q123 oracle.
 
-Scale: one rFFT batch per clip inside the standard iterator
-pandas-UDF; only the 2*n_mels floats leave the UDF.
+Scale: one rFFT batch per clip, an analyzer on the shared decode core
+(checks.make_decode_udf); only the 2*n_mels floats leave the UDF.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from data_validator_spark.audio import codecs
+from data_validator_spark.audio.checks import make_decode_udf
 
 N_MELS = 40
 FRAME_MS = 25
@@ -117,37 +114,12 @@ def log_mel_embedding(
 
 
 def make_embedding_udf(n_mels: int = N_MELS, plugins: dict | None = None):
-    schema = T.StructType(
-        [
-            T.StructField("decode_error", T.StringType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
-    )
+    def analyze(row: codecs.DecodedRow) -> dict:
+        emb = log_mel_embedding(row.pcm, row.sr, n_mels)
+        return {"embedding": [float(v) for v in emb]}
 
-    @pandas_udf(schema)
-    def _embed_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            err = np.full(n, None, dtype=object)
-            emb = np.full(n, None, dtype=object)
-            codec_col = pdf["codec"].to_numpy()
-            payloads = pdf["bytes"].to_numpy()
-            for i in range(n):
-                try:
-                    pcm, sr = codecs.decode(
-                        codec_col[i], payloads[i], plugins=plugins
-                    )
-                    emb[i] = [
-                        float(v) for v in log_mel_embedding(pcm, sr, n_mels)
-                    ]
-                except codecs.CodecError as e:
-                    err[i] = str(e)
-            yield pd.DataFrame({"decode_error": err, "embedding": emb})
-
-    return _embed_udf
-
-
-audio_embedding_udf = make_embedding_udf()
+    fields = [("embedding", T.ArrayType(T.FloatType()), None)]
+    return make_decode_udf(fields, analyze, plugins)
 
 
 def audio_embeddings(
@@ -159,11 +131,7 @@ def audio_embeddings(
     and `embed_error`. The result feeds the similarity tier directly
     (cosine_topk / lsh_topk / ivf_topk / embedding near-dup screens) —
     cross-codec content dedup is audio_embeddings |> cosine threshold."""
-    udf = (
-        make_embedding_udf(n_mels, plugins)
-        if plugins or n_mels != N_MELS
-        else audio_embedding_udf
-    )
+    udf = make_embedding_udf(n_mels, plugins)
     res = udf(F.struct(F.col("clip_id"), F.col("codec"), F.col("bytes")))
     return (
         clips.withColumn("_emb", res)

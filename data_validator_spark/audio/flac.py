@@ -521,6 +521,10 @@ def encode_flac(
     sr_hz = int(sr_hz)
     if not (1 <= sr_hz < (1 << 20)):
         raise FlacError(f"sample rate {sr_hz} out of FLAC range")
+    # the subframe-type field holds order-1 in 5 bits: 33 would write
+    # a different (corrupt) subframe type
+    if lpc_order is not None and not (1 <= lpc_order <= 32):
+        raise FlacError(f"lpc_order {lpc_order} out of range 1..32")
     i16 = (np.clip(np.asarray(pcm, np.float64), -1.0, 1.0) * 32767.0).round()
     x_all = i16.astype(np.int64)
     n_total = len(x_all)

@@ -32,24 +32,22 @@ documented approximation whose error vanishes for stationary content
 (measured < 0.1 LU on sines; tests pin the 997 Hz anchor at the
 BS.1770 textbook value, 0 dBFS sine -> -3.01 LUFS).
 
-Scale design: pure numpy per Arrow batch inside the same iterator
-pandas-UDF shape as audio/checks.py; only scalars (lufs, block
-counts) leave the UDF — PCM never shuffles.
+Scale design: pure numpy per row, an analyzer on the shared decode
+core (checks.make_decode_udf); only scalars (lufs, block counts)
+leave the UDF — PCM never shuffles.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from data_validator_spark.audio import codecs
+from data_validator_spark.audio.checks import make_decode_udf
 
 BLOCK_MS = 400
 HOP_MS = 100
@@ -154,52 +152,22 @@ def integrated_lufs(pcm: np.ndarray, fs: int) -> tuple[float, int, int]:
     return float(lufs), int(n_blocks), int(keep2.sum())
 
 
-_SCHEMA = T.StructType(
-    [
-        T.StructField("decode_error", T.StringType()),
-        T.StructField("loudness_lufs", T.DoubleType()),
-        T.StructField("n_blocks", T.IntegerType()),
-        T.StructField("n_gated_blocks", T.IntegerType()),
-    ]
-)
+_FIELDS = [
+    ("loudness_lufs", T.DoubleType(), np.nan),
+    ("n_blocks", T.IntegerType(), 0),
+    ("n_gated_blocks", T.IntegerType(), 0),
+]
 
 
 def make_loudness_udf(plugins: dict | None = None):
     """Decode + integrated-loudness pandas UDF; `plugins` rides the
-    closure like checks.make_audio_check_udf (native decoder seam)."""
+    closure like every decode UDF (native decoder seam)."""
 
-    @pandas_udf(_SCHEMA)
-    def _loudness_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            err = np.full(n, None, dtype=object)
-            lufs = np.full(n, np.nan)
-            nb = np.zeros(n, dtype=np.int32)
-            ng = np.zeros(n, dtype=np.int32)
-            codec_col = pdf["codec"].to_numpy()
-            payloads = pdf["bytes"].to_numpy()
-            for i in range(n):
-                try:
-                    pcm, sr = codecs.decode(
-                        codec_col[i], payloads[i], plugins=plugins
-                    )
-                except codecs.CodecError as e:  # incl. PcmUnsupported
-                    err[i] = str(e)
-                    continue
-                lufs[i], nb[i], ng[i] = integrated_lufs(pcm, sr)
-            yield pd.DataFrame(
-                {
-                    "decode_error": err,
-                    "loudness_lufs": lufs,
-                    "n_blocks": nb,
-                    "n_gated_blocks": ng,
-                }
-            )
+    def analyze(row: codecs.DecodedRow) -> dict:
+        lufs, nb, ng = integrated_lufs(row.pcm, row.sr)
+        return {"loudness_lufs": lufs, "n_blocks": nb, "n_gated_blocks": ng}
 
-    return _loudness_udf
-
-
-loudness_udf = make_loudness_udf()
+    return make_decode_udf(_FIELDS, analyze, plugins)
 
 
 def loudness_report(
@@ -213,8 +181,7 @@ def loudness_report(
     (`audio_loudness_out_of_range(x.x)` value-echoing style, or
     `audio_loudness_unmeasurable` for clips with no gated blocks —
     silence or sub-400ms)."""
-    udf = make_loudness_udf(plugins) if plugins else loudness_udf
-    res = udf(
+    res = make_loudness_udf(plugins)(
         F.struct(F.col("clip_id"), F.col("codec"), F.col("bytes"))
     )
     out = clips.withColumn("_loud", res)

@@ -25,26 +25,19 @@ Rule tier (soft labels, reference-style value-echoing messages —
   audio_dc_offset(x)  |dc_offset| > 0.05
   audio_silent(r)     silence_ratio > 0.5
 
-Scale notes: the UDF is the iterator pandas form (Arrow batches,
-session-capped at 512 rows so binary batches fit executor memory);
+Scale notes: analyze_pcm runs inside the decode-check UDF
+(checks.make_audio_check_udf(quality=True), the shared decode core);
 per-row cost is O(n log n) for one rFFT of <= a few seconds of audio;
 nothing but scalars leave the UDF, so no wide shuffle ever carries
-PCM. Callers repartition before this stage exactly like
-checks.run_audio_checks.
+PCM.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
-
-from data_validator_spark.audio import codecs, synth
 
 CLIP_FULL_SCALE = 0.999
 CLIPPING_MAX_RATIO = 0.01
@@ -68,18 +61,6 @@ _FEATURE_FIELDS = [
     # NaN for clips shorter than one 400 ms block or fully gated out
     ("loudness_lufs", T.DoubleType()),
 ]
-
-_RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("decode_error", T.StringType()),
-        T.StructField("snr_db", T.DoubleType()),
-        T.StructField("container_sr", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("pcm_unsupported", T.BooleanType()),
-    ]
-    + [T.StructField(name, dt) for name, dt in _FEATURE_FIELDS]
-)
-
 
 def analyze_pcm(pcm: np.ndarray, sr_hz: int) -> dict[str, float]:
     """Pure-numpy feature extraction for one decoded clip (float32
@@ -157,118 +138,6 @@ def analyze_pcm(pcm: np.ndarray, sr_hz: int) -> dict[str, float]:
         "effective_bits": float(eff_bits),
         "loudness_lufs": float(lufs),
     }
-
-
-def make_audio_quality_udf(
-    plugins: dict | None = None,
-    inspectors: dict | None = None,
-    embed_mels: int | None = None,
-):
-    """Build the fused quality UDF, optionally closing over `plugins`
-    (codec -> decode callable) and `inspectors` (codec -> metadata
-    inspect callable) — mirrors checks.make_audio_check_udf: the
-    dicts ride the UDF closure to every python worker.
-
-    embed_mels (opt-in): also emit the log-mel content `embedding`
-    (audio/features.py, 2*embed_mels floats) from the SAME decode —
-    a pipeline that validates AND content-dedups pays exactly one
-    pass over the payload column."""
-    schema = _RESULT_SCHEMA
-    if embed_mels:
-        schema = T.StructType(
-            schema.fields
-            + [T.StructField("embedding", T.ArrayType(T.FloatType()))]
-        )
-
-    @pandas_udf(schema)
-    def _audio_quality_udf(
-        it: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield _quality_batch(pdf, plugins, inspectors, embed_mels)
-
-    return _audio_quality_udf
-
-
-def _quality_batch(
-    pdf: pd.DataFrame,
-    plugins: dict | None,
-    inspectors: dict | None = None,
-    embed_mels: int | None = None,
-) -> pd.DataFrame:
-    """struct(clip_id, codec, sr_hz, bytes, skip) batch ->
-    decode outcome + SNR invariant + quality features, ONE decode per
-    row (the fused path: a pipeline running both the per-row invariant
-    and quality gating pays a single pass over the payload column).
-    skip=True rows pass through all-null with no decode attempt,
-    mirroring checks.audio_check_udf."""
-    feat_names = [name for name, _ in _FEATURE_FIELDS]
-    n = len(pdf)
-    out = {
-        "decode_error": np.full(n, None, dtype=object),
-        "snr_db": np.full(n, np.nan),
-        "container_sr": np.full(n, -1, dtype=np.int64),
-        "n_samples": np.full(n, -1, dtype=np.int64),
-        "pcm_unsupported": np.zeros(n, dtype=bool),
-    }
-    if embed_mels:
-        from data_validator_spark.audio import features
-
-        emb = np.full(n, None, dtype=object)
-    for name in feat_names:
-        out[name] = np.full(n, np.nan)
-    clip_ids = pdf["clip_id"].to_numpy()
-    codec_col = pdf["codec"].to_numpy()
-    payloads = pdf["bytes"].to_numpy()
-    skips = pdf["skip"].to_numpy()
-    for i in range(n):
-        if skips[i]:
-            continue
-        try:
-            pcm, sr = codecs.decode(codec_col[i], payloads[i], plugins=plugins)
-        except codecs.PcmUnsupportedError:
-            # metadata tier: real container checks, no PCM features
-            meta = codecs.inspect_metadata(
-                codec_col[i], payloads[i], inspectors=inspectors
-            )
-            if meta is None:
-                out["decode_error"][i] = (
-                    "pcm decode unsupported, no metadata tier"
-                )
-            elif meta["error"] is not None:
-                out["decode_error"][i] = meta["error"]
-            else:
-                out["pcm_unsupported"][i] = True
-                in_sr = meta.get("input_sr") or 0
-                if in_sr > 0:
-                    out["container_sr"][i] = in_sr
-                    if meta.get("duration_ms") is not None:
-                        out["n_samples"][i] = int(round(
-                            meta["duration_ms"] / 1000.0 * in_sr
-                        ))
-            continue
-        except codecs.CodecError as e:
-            out["decode_error"][i] = str(e)
-            continue
-        out["container_sr"][i] = sr
-        out["n_samples"][i] = len(pcm)
-        ref = synth.reference_pcm(str(clip_ids[i]), int(sr), len(pcm))
-        out["snr_db"][i] = codecs.snr_db(ref, pcm)
-        for name, val in analyze_pcm(pcm, sr).items():
-            out[name][i] = val
-        if embed_mels:
-            emb[i] = [
-                float(v)
-                for v in features.log_mel_embedding(pcm, sr, embed_mels)
-            ]
-    out["container_sr"] = pd.array(out["container_sr"], dtype="Int32")
-    if embed_mels:
-        out["embedding"] = emb
-    return pd.DataFrame(out)
-
-
-# default instance (no plugins) — the common path and the public name
-audio_quality_udf = make_audio_quality_udf()
 
 
 def quality_labels_expr(

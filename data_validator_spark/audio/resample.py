@@ -26,16 +26,14 @@ comparisons trim them.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from data_validator_spark.audio import codecs
+from data_validator_spark.audio.checks import make_decode_udf
 
 DEFAULT_HALF_TAPS = 16
 DEFAULT_BETA = 8.6
@@ -93,13 +91,10 @@ def resample(
     return y
 
 
-_SCHEMA = T.StructType(
-    [
-        T.StructField("decode_error", T.StringType()),
-        T.StructField("bytes_out", T.BinaryType()),
-        T.StructField("n_samples_out", T.LongType()),
-    ]
-)
+_FIELDS = [
+    ("bytes_out", T.BinaryType(), None),
+    ("n_samples_out", T.LongType(), -1),
+]
 
 
 def make_resample_udf(
@@ -107,38 +102,15 @@ def make_resample_udf(
     out_codec: str = "pcm16",
     plugins: dict | None = None,
 ):
-    """Decode -> resample -> re-encode pandas UDF (one payload pass)."""
+    """Decode -> resample -> re-encode pandas UDF (one payload pass).
+    A failed re-encode is a decode_error row like a failed decode."""
 
-    @pandas_udf(_SCHEMA)
-    def _resample_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            err = np.full(n, None, dtype=object)
-            out = np.full(n, None, dtype=object)
-            cnt = np.full(n, -1, dtype=np.int64)
-            codec_col = pdf["codec"].to_numpy()
-            payloads = pdf["bytes"].to_numpy()
-            for i in range(n):
-                try:
-                    pcm, sr = codecs.decode(
-                        codec_col[i], payloads[i], plugins=plugins
-                    )
-                    y = resample(pcm, sr, target_sr)
-                    out[i] = codecs.encode(
-                        out_codec, np.clip(y, -1.0, 1.0), target_sr
-                    )
-                    cnt[i] = len(y)
-                except codecs.CodecError as e:
-                    err[i] = str(e)
-            yield pd.DataFrame(
-                {
-                    "decode_error": err,
-                    "bytes_out": out,
-                    "n_samples_out": cnt,
-                }
-            )
+    def analyze(row: codecs.DecodedRow) -> dict:
+        y = resample(row.pcm, row.sr, target_sr)
+        out = codecs.encode(out_codec, np.clip(y, -1.0, 1.0), target_sr)
+        return {"bytes_out": out, "n_samples_out": len(y)}
 
-    return _resample_udf
+    return make_decode_udf(_FIELDS, analyze, plugins)
 
 
 def resample_clips(

@@ -18,10 +18,10 @@ Semantics:
     downstream stage (audio checks, quality, embeddings) consumes
     them unchanged
 
-Scale: segmentation is a per-clip mapInPandas (one decode, k encodes)
-— rows fan OUT inside the UDF, payloads never shuffle; downstream
-stages see ordinary clip rows. The RMS valley search is a cumsum
-lookup, not a python loop.
+Scale: segmentation is a per-clip mapInPandas (one decode through
+codecs.decode_rows, k encodes) — rows fan OUT inside the UDF,
+payloads never shuffle; downstream stages see ordinary clip rows.
+The RMS valley search is a cumsum lookup, not a python loop.
 
 seg_id uses the reference's ':'-suffix id-construction convention
 (firestore_services.py:169-184 `{user}:{assignment}:{part}` pattern):
@@ -106,6 +106,60 @@ _SCHEMA = T.StructType(
 )
 
 
+def _segment_batch(
+    pdf: pd.DataFrame,
+    max_ms: int,
+    min_ms: int,
+    snap_ms: int,
+    out_codec: str,
+    plugins: dict | None,
+) -> pd.DataFrame:
+    """One input batch (clip_id, codec, bytes[, sr_hz]) -> its segment
+    rows (the Spark-free body of segment_clips' mapInPandas)."""
+    sr_col = pdf["sr_hz"].to_numpy() if "sr_hz" in pdf.columns else None
+    codec_col = pdf["codec"].to_numpy()
+    rows = []
+    for row in codecs.decode_rows(pdf, plugins):
+        cid, pcm, sr, err = row.clip_id, row.pcm, row.sr, row.error
+        if err is None:
+            try:
+                bounds, dropped = plan_boundaries(
+                    pcm, sr, max_ms, snap_ms, min_ms
+                )
+                for i in range(len(bounds) - 1):
+                    a, b = bounds[i], bounds[i + 1]
+                    rows.append(
+                        (
+                            cid,
+                            i,
+                            f"{cid}:seg{i}",
+                            a * 1000.0 / sr,
+                            (b - a) * 1000.0 / sr,
+                            out_codec,
+                            sr,
+                            codecs.encode(out_codec, pcm[a:b], sr),
+                            dropped * 1000.0 / sr,
+                            None,
+                        )
+                    )
+            except codecs.CodecError as e:
+                err = str(e)
+        if err is not None:
+            # sr_hz may be null/NaN on exactly the broken rows that
+            # land here — a bare int() would crash the whole UDF task
+            # instead of emitting the error row
+            sr_raw = sr_col[row.i] if sr_col is not None else None
+            try:
+                sr_val = int(sr_raw) if pd.notna(sr_raw) else -1
+            except (TypeError, ValueError):
+                sr_val = -1
+            rows.append(
+                (cid, 0, f"{cid}:seg0", 0.0, 0.0, str(codec_col[row.i]),
+                 sr_val, None, 0.0, err)
+            )
+    return pd.DataFrame(rows, columns=_SCHEMA.fieldNames())
+
+
 def segment_clips(
     clips: DataFrame,
     max_ms: int,
@@ -120,54 +174,8 @@ def segment_clips(
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                cid = r["clip_id"]
-                try:
-                    pcm, sr = codecs.decode(
-                        r["codec"], r["bytes"], plugins=plugins
-                    )
-                    bounds, dropped = plan_boundaries(
-                        pcm, sr, max_ms, snap_ms, min_ms
-                    )
-                    for i in range(len(bounds) - 1):
-                        a, b = bounds[i], bounds[i + 1]
-                        rows.append(
-                            (
-                                cid,
-                                i,
-                                f"{cid}:seg{i}",
-                                a * 1000.0 / sr,
-                                (b - a) * 1000.0 / sr,
-                                out_codec,
-                                sr,
-                                codecs.encode(out_codec, pcm[a:b], sr),
-                                dropped * 1000.0 / sr,
-                                None,
-                            )
-                        )
-                except codecs.CodecError as e:
-                    # sr_hz may be null/NaN on exactly the broken rows
-                    # that land here — a bare int() would crash the
-                    # whole UDF task instead of emitting the error row
-                    sr_raw = r["sr_hz"] if "sr_hz" in r else None
-                    try:
-                        sr_val = int(sr_raw) if pd.notna(sr_raw) else -1
-                    except (TypeError, ValueError):
-                        sr_val = -1
-                    rows.append(
-                        (cid, 0, f"{cid}:seg0", 0.0, 0.0,
-                         str(r["codec"]),
-                         sr_val,
-                         None, 0.0, str(e))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "clip_id", "seg_idx", "seg_id", "seg_start_ms",
-                    "seg_dur_ms", "codec", "sr_hz", "bytes",
-                    "n_dropped_tail_ms", "segment_error",
-                ],
+            yield _segment_batch(
+                pdf, max_ms, min_ms, snap_ms, out_codec, plugins
             )
 
     cols = ["clip_id", "codec", "bytes"] + (

@@ -18,6 +18,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 from typing import Sequence
 
@@ -329,8 +330,14 @@ def kll_drift(
 
     def _sql_lit(v: float) -> str:
         # repr is the shortest round-trip decimal; Java parses it back
-        # to the identical IEEE-754 double
-        return "CAST('NaN' AS DOUBLE)" if v != v else repr(float(v)) + "D"
+        # to the identical IEEE-754 double. Non-finite values have no
+        # numeric literal (repr gives `infD`), so they go through CAST
+        v = float(v)
+        if v != v:
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(v):
+            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+        return repr(v) + "D"
 
     parts: list[DataFrame] = []
     for lo in range(0, len(col_names), max(1, chunk_cols)):
@@ -347,7 +354,8 @@ def kll_drift(
             body = gaps[0] if len(gaps) == 1 else (
                 "greatest(" + ", ".join(gaps) + ")"
             )
-            esc = col_name.replace("'", "''")
+            # backslash is an escape in Spark SQL string literals
+            esc = col_name.replace("\\", "\\\\").replace("'", "''")
             arms.append(f"WHEN '{esc}' THEN {body}")
         ks_sql = (
             "CASE column_name "

@@ -392,3 +392,22 @@ def test_lpc_kernel_bit_exact_vs_naive_all_orders():
         res = rng.integers(-80, 80, 400)
         got = flac._restore_lpc(warm, coefs, shift, res)
         assert np.array_equal(got, naive(warm, coefs, shift, res)), order
+
+
+def test_encode_lpc_order_range():
+    """lpc_order outside 1..32 is refused: the subframe-type field
+    holds order-1 in 5 bits, so 33 used to write a corrupt stream.
+    32, the largest FLAC order, still round-trips bit-exact."""
+    rng = np.random.default_rng(5)
+    t = np.arange(6000)
+    pcm = np.clip(
+        0.4 * np.sin(2 * np.pi * 330 * t / 16000)
+        + 0.02 * rng.standard_normal(len(t)),
+        -1, 1,
+    ).astype(np.float32)
+    for bad in (0, 33):
+        with pytest.raises(FlacError, match="lpc_order"):
+            encode_flac(pcm, 16000, lpc_order=bad)
+    dec, sr = decode_flac(encode_flac(pcm, 16000, lpc_order=32))
+    assert sr == 16000
+    assert np.array_equal(_i16(dec), _i16(pcm))

@@ -1,5 +1,7 @@
 """Column profile + drift metric tests."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -231,6 +233,23 @@ def test_kll_drift_tracks_exact_ks(spark, clips):
     )
     assert est.ks == pytest.approx(exact, abs=0.02)
     assert exact > 0.1  # the shift is real drift
+
+
+def test_kll_drift_nonfinite_values_and_odd_column_names(spark):
+    """±inf probes have no numeric SQL literal (repr gives `infD`), and
+    a backslash in a column name is an escape inside the CASE arm's
+    string: each used to fail the whole call or null its ks. Every
+    column here self-compares to a finite ks."""
+    inf = float("inf")
+    rows = [(float(i), float(i), float(i)) for i in range(20)]
+    rows += [(inf, -inf, inf), (-inf, inf, -inf)]
+    df = spark.createDataFrame(rows, "`a\\b` double, `c\\` double, `it's` double")
+    sk = stats.kll_sketches(df, df.columns)
+    out = {r.column_name: r.ks for r in stats.kll_drift(sk, sk).collect()}
+    assert set(out) == {"a\\b", "c\\", "it's"}
+    for name, ks in out.items():
+        assert ks is not None and math.isfinite(ks), name
+        assert ks == pytest.approx(0.0, abs=0.01), name
 
 
 def test_correlation_profile_values_and_single_scan(spark):
