@@ -59,16 +59,24 @@ _BENCH_CONF = {
 }
 
 
+def default_heap_mb() -> int:
+    """A quarter of host RAM, clamped to 1-8 GiB (perfbench's sizing):
+    a fixed 24g heap does not fit a 16 GB host. At the 1M-row curve
+    point on a 128 GiB host, 32 concurrent dynamic-partition write
+    tasks each buffer a parquet row group of ~30KB payload rows plus
+    the partition-sort spill headroom, so set SPARK_DRIVER_MEM there
+    (24g was the measured fit). Cluster analogue: size executor memory
+    to concurrent write tasks x row-group size, not to the input split
+    size."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return max(1024, min(8192, ram // 4 // (1 << 20)))
+
+
 def build(cores: int):
     from data_validator_spark.session import build_session
 
-    # 24g heap for bench sessions (host has 128 GiB): at the 1M-row
-    # curve point, 32 concurrent dynamic-partition write tasks each
-    # buffer a parquet row group of ~30KB payload rows plus the
-    # partition-sort spill headroom — the session default 8g OOM'd
-    # there. Cluster analogue: size executor memory to concurrent
-    # write tasks x row-group size, not to the input split size.
-    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
+    # an explicit SPARK_DRIVER_MEM always wins
+    os.environ.setdefault("SPARK_DRIVER_MEM", f"{default_heap_mb()}m")
     return build_session(app_name=f"bench_local{cores}", cores=cores,
                          extra_conf=dict(_BENCH_CONF))
 

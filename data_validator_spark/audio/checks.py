@@ -52,6 +52,8 @@ from data_validator_spark.audio.quality import (
     analyze_pcm,
     quality_labels_expr,
 )
+from data_validator_spark.functions.sqltext import lit, project
+from data_validator_spark.session import per_jvm
 
 SNR_MIN_DB = 30.0
 
@@ -87,6 +89,7 @@ def make_decode_udf(
         [T.StructField("decode_error", T.StringType())]
         + [T.StructField(name, dt) for name, dt, _ in fields]
     )
+    int32 = [name for name, dt, _ in fields if isinstance(dt, T.IntegerType)]
 
     @pandas_udf(schema)
     def _decode_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -100,6 +103,7 @@ def make_decode_udf(
                     continue
                 try:
                     vals = analyze(row)
+                    _check_int32(vals, int32)
                 except codecs.CodecError as e:  # e.g. a failed re-encode
                     err[row.i] = str(e)
                     continue
@@ -107,7 +111,8 @@ def make_decode_udf(
                     cols[name][row.i] = v
             out = {"decode_error": err}
             for name, dt, _ in fields:
-                # nullable Int32 refuses out-of-range ints, never wraps
+                # nullable Int32 refuses out-of-range ints, never wraps;
+                # _check_int32 turned those rows into decode errors
                 out[name] = (
                     pd.array(cols[name], dtype="Int32")
                     if isinstance(dt, T.IntegerType)
@@ -116,6 +121,15 @@ def make_decode_udf(
             yield pd.DataFrame(out)
 
     return _decode_udf
+
+
+def _check_int32(vals: dict, names: list[str]) -> None:
+    """A header value that does not fit an INT field (a WAV `fmt` rate
+    of 3,000,000,000) is that row's decode error, not a task failure."""
+    for name in names:
+        v = vals.get(name)
+        if v is not None and not -(2**31) <= v < 2**31:
+            raise codecs.CodecError(f"{name} out of int32 range: {v}")
 
 
 def _metadata_outcome(meta: dict) -> dict:
@@ -244,9 +258,15 @@ def run_audio_checks(
                 f"{set_knobs} require quality=True"
             )
     skip = F.col(skip_col) if skip_col else F.lit(False)
-    udf = make_audio_check_udf(
-        decoder_plugins, inspector_plugins, quality, embed_mels
-    )
+    if decoder_plugins or inspector_plugins:
+        udf = make_audio_check_udf(
+            decoder_plugins, inspector_plugins, quality, embed_mels
+        )
+    else:  # plugin-free UDFs are built (and pickled) once per JVM
+        udf = per_jvm(
+            ("audio_check_udf", quality, embed_mels),
+            lambda: make_audio_check_udf(None, None, quality, embed_mels),
+        )
     res = udf(
         F.struct(
             F.col("clip_id"),
@@ -256,84 +276,61 @@ def run_audio_checks(
             skip.alias("skip"),
         )
     )
-    out = clips.withColumn("audio_bytes_null", F.col("bytes").isNull()).withColumn(
-        "_audio", res
+    out = clips.withColumns(
+        {"audio_bytes_null": F.col("bytes").isNull(), "_audio": res}
     )
+    # every outcome column in ONE projection of SQL text over the
+    # decode-result struct (the UDF stays a single call per row)
+    cols: dict[str, str] = {}
     if quality:
         for name, _ in _FEATURE_FIELDS:
-            out = out.withColumn(name, F.col(f"_audio.{name}"))
+            cols[name] = f"_audio.{name}"
         if embed_mels:
-            out = out.withColumn("embedding", F.col("_audio.embedding"))
-        out = out.withColumn(
-            "_quality_labels",
-            quality_labels_expr(
-                "_audio",
-                clipping_max if clipping_max is not None else CLIPPING_MAX_RATIO,
-                dc_max if dc_max is not None else DC_OFFSET_MAX,
-                silence_max if silence_max is not None else SILENCE_MAX_RATIO,
-                upsample_min_ratio=upsample_min_ratio,
-                min_effective_bits=min_effective_bits,
-                lufs_min=lufs_min,
-                lufs_max=lufs_max,
-            ),
+            cols["embedding"] = "_audio.embedding"
+        cols["_quality_labels"] = quality_labels_expr(
+            "_audio",
+            clipping_max if clipping_max is not None else CLIPPING_MAX_RATIO,
+            dc_max if dc_max is not None else DC_OFFSET_MAX,
+            silence_max if silence_max is not None else SILENCE_MAX_RATIO,
+            upsample_min_ratio=upsample_min_ratio,
+            min_effective_bits=min_effective_bits,
+            lufs_min=lufs_min,
+            lufs_max=lufs_max,
         )
     # per-codec threshold override: the audio analogue of the
     # reference's per-task rt-bound overrides (core_models.py:169-202)
     # — lossy codecs legitimately bottom out below a lossless bar.
-    # Compiles to a when-chain (static config, stays in codegen).
-    thresh = F.lit(float(snr_min))
-    for codec_name, lo in (snr_min_by_codec or {}).items():
-        thresh = F.when(
-            F.col("codec") == codec_name, F.lit(float(lo))
-        ).otherwise(thresh)
-    snr_name = f"audio_snr_below_{int(snr_min)}db"
-    return (
-        out.withColumn("audio_decode_error", F.col("_audio.decode_error"))
-        .withColumn("audio_snr_db", F.col("_audio.snr_db"))
-        # decoded length + container rate surface so downstream rules
-        # (duration consistency, transcript plausibility) can use the
-        # DECODED duration instead of trusting dur_ms metadata
-        .withColumn("audio_n_samples", F.col("_audio.n_samples"))
-        .withColumn("audio_container_sr", F.col("_audio.container_sr"))
-        .withColumn(
-            "_snr_label",
-            F.when(
-                F.col("_audio.decode_error").isNull()
-                & (F.col("_audio.snr_db") < thresh),
-                F.concat(
-                    F.lit(snr_name + "("),
-                    F.round(F.col("_audio.snr_db"), 1).cast("string"),
-                    F.lit(")"),
-                ),
-            ),
-        )
-        .withColumn(
-            "_container_sr_label",
-            F.when(
-                F.col("_audio.decode_error").isNull()
-                & F.col("sr_hz").isNotNull()
-                & (F.col("_audio.container_sr") != F.col("sr_hz")),
-                F.concat(
-                    F.lit("bytes_sr_mismatch("),
-                    F.col("_audio.container_sr").cast("string"),
-                    F.lit(")"),
-                ),
-            ),
-        )
-        .withColumn(
-            "_pcm_unsupported_label",
-            F.when(
-                F.col("_audio.decode_error").isNull()
-                & F.col("_audio.pcm_unsupported"),
-                F.concat(
-                    F.lit("audio_codec_unsupported_pcm("),
-                    F.col("codec"),
-                    F.lit(")"),
-                ),
-            ),
-        )
-        .drop("_audio")
+    # Compiles to a CASE (static config, stays in codegen).
+    arms = "".join(
+        f"WHEN codec = {lit(c)} THEN {lit(float(lo))} "
+        for c, lo in reversed(list((snr_min_by_codec or {}).items()))
     )
+    thresh = lit(float(snr_min))
+    if arms:
+        thresh = f"CASE {arms}ELSE {thresh} END"
+    decoded = "_audio.decode_error IS NULL"
+    snr_name = f"audio_snr_below_{int(snr_min)}db"
+    cols.update(
+        {
+            "audio_decode_error": "_audio.decode_error",
+            "audio_snr_db": "_audio.snr_db",
+            # decoded length + container rate surface so downstream
+            # rules (duration consistency, transcript plausibility) can
+            # use the DECODED duration instead of trusting dur_ms
+            "audio_n_samples": "_audio.n_samples",
+            "audio_container_sr": "_audio.container_sr",
+            "_snr_label": f"CASE WHEN {decoded} AND _audio.snr_db < {thresh} "
+            f"THEN concat('{snr_name}(', CAST(round(_audio.snr_db, 1) AS STRING), ')') END",
+            # container_sr > 0: skipped rows and metadata-tier rows
+            # with no declared rate carry the -1 sentinel, not a rate
+            "_container_sr_label": f"CASE WHEN {decoded} AND sr_hz IS NOT NULL "
+            "AND _audio.container_sr > 0 AND _audio.container_sr != sr_hz "
+            "THEN concat('bytes_sr_mismatch(', CAST(_audio.container_sr AS STRING), ')') END",
+            "_pcm_unsupported_label": f"CASE WHEN {decoded} AND _audio.pcm_unsupported "
+            "THEN concat('audio_codec_unsupported_pcm(', codec, ')') END",
+        }
+    )
+    return project(out, out.columns, cols, drop=["_audio"])
 
 
 def duration_consistency_label(

@@ -246,6 +246,12 @@ def _parse_head(packet: bytes) -> dict:
             )
         if len(packet) < 21 + channels:
             raise OpusError("channel mapping table truncated")
+        if len(packet) > 21 + channels:
+            # exact length, as family 0 is held to its 19 bytes
+            raise OpusError(
+                f"OpusHead carries {len(packet) - 21 - channels} bytes "
+                "after the channel mapping table"
+            )
         streams = packet[19]
         coupled = packet[20]
         if streams < 1:

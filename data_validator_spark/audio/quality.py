@@ -36,8 +36,9 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from data_validator_spark.functions.sqltext import ident, lit
 
 CLIP_FULL_SCALE = 0.999
 CLIPPING_MAX_RATIO = 0.01
@@ -149,14 +150,25 @@ def quality_labels_expr(
     min_effective_bits: int | None = None,
     lufs_min: float | None = None,
     lufs_max: float | None = None,
-) -> Column:
+) -> str:
     """';'-joined soft-tier quality labels (NULL when clean) over the
-    named decode-result struct column — the same value-echoing shape
-    the rule compiler emits, so plans fold it straight into
-    `messages`. Shared by run_quality_checks and the fused
-    checks.run_audio_checks(quality=True) path."""
-    s = F.col(struct_name)
-    decoded = s.getField("decode_error").isNull()
+    named decode-result struct column, as SQL text — the same
+    value-echoing shape the rule compiler emits, so plans fold it
+    straight into `messages`. Shared by run_quality_checks and the
+    fused checks.run_audio_checks(quality=True) path, which evaluate it
+    in their one outcome projection."""
+    s = ident(struct_name)
+
+    def f(name: str) -> str:
+        return f"{s}.{ident(name)}"
+
+    def label(cond: str, name: str, value: str) -> str:
+        return (
+            f"CASE WHEN {f('decode_error')} IS NULL AND {cond} "
+            f"THEN concat('{name}(', CAST({value} AS STRING), ')') END"
+        )
+
+    labels = []
     # upsample detection is OPT-IN (upsample_min_ratio=None disables):
     # legitimate narrowband content (a tone, a sine-sweep fixture)
     # is spectrally indistinguishable from an upsample artifact, so
@@ -164,97 +176,62 @@ def quality_labels_expr(
     # bandwidth is measured vs the DECODED container rate — a clip
     # whose content fills its claimed sr_hz but not its real one is
     # precisely the defect.
-    upsample = (
-        F.when(
-            decoded
-            & (s.getField("container_sr") > 0)
-            & (s.getField("silence_ratio") < 1.0)
-            & (
-                s.getField("bandwidth_hz")
-                < F.lit(upsample_min_ratio) * s.getField("container_sr") / 2.0
-            ),
-            F.concat(
-                F.lit("audio_upsampled("),
-                F.round(
-                    s.getField("bandwidth_hz")
-                    / (s.getField("container_sr") / 2.0),
-                    3,
-                ).cast("string"),
-                F.lit(")"),
-            ),
+    if upsample_min_ratio is not None:
+        nyquist = f"{f('container_sr')} / 2.0D"
+        labels.append(
+            label(
+                f"{f('container_sr')} > 0 AND {f('silence_ratio')} < 1.0D "
+                f"AND {f('bandwidth_hz')} < {lit(upsample_min_ratio)} * {nyquist}",
+                "audio_upsampled",
+                f"round({f('bandwidth_hz')} / ({nyquist}), 3)",
+            )
         )
-        if upsample_min_ratio is not None
-        else F.lit(None).cast("string")
-    )
     # low-bitdepth is opt-in for the same reason as upsample: whether
     # 8-bit provenance is a defect is a dataset policy. Silence
     # (effective_bits = 0 by convention) is the silence rule's job.
-    low_depth = (
-        F.when(
-            decoded
-            & (s.getField("effective_bits") > 0)
-            & (s.getField("effective_bits") < F.lit(min_effective_bits)),
-            F.concat(
-                F.lit("audio_low_bitdepth("),
-                s.getField("effective_bits").cast("int").cast("string"),
-                F.lit(")"),
-            ),
+    if min_effective_bits is not None:
+        labels.append(
+            label(
+                f"{f('effective_bits')} > 0 "
+                f"AND {f('effective_bits')} < {lit(min_effective_bits)}",
+                "audio_low_bitdepth",
+                f"CAST({f('effective_bits')} AS INT)",
+            )
         )
-        if min_effective_bits is not None
-        else F.lit(None).cast("string")
-    )
     # loudness bounds are opt-in like the other policies: the target
     # window is a corpus-normalization choice (speech ~-16..-23 LUFS),
     # not a universal constant. Unmeasurable clips (NaN/NULL: shorter
     # than one 400 ms block, or fully gated silence) are NOT flagged
     # here — the silence rule owns that defect class.
-    lufs = s.getField("loudness_lufs")
-    loud_rule = (
-        F.when(
-            decoded
-            & lufs.isNotNull()
-            & ~F.isnan(lufs)
-            & ((lufs < F.lit(lufs_min)) | (lufs > F.lit(lufs_max))),
-            F.concat(
-                F.lit("audio_loudness_out_of_range("),
-                F.round(lufs, 1).cast("string"),
-                F.lit(")"),
-            ),
+    if lufs_min is not None and lufs_max is not None:
+        lufs = f("loudness_lufs")
+        labels.append(
+            label(
+                f"{lufs} IS NOT NULL AND NOT isnan({lufs}) "
+                f"AND ({lufs} < {lit(lufs_min)} OR {lufs} > {lit(lufs_max)})",
+                "audio_loudness_out_of_range",
+                f"round({lufs}, 1)",
+            )
         )
-        if lufs_min is not None and lufs_max is not None
-        else F.lit(None).cast("string")
-    )
-    labels = F.array(
-        upsample,
-        low_depth,
-        loud_rule,
-        F.when(
-            decoded & (s.getField("clipping_ratio") > clipping_max),
-            F.concat(
-                F.lit("audio_clipping("),
-                F.round(s.getField("clipping_ratio"), 3).cast("string"),
-                F.lit(")"),
-            ),
+    labels += [
+        label(
+            f"{f('clipping_ratio')} > {lit(clipping_max)}",
+            "audio_clipping",
+            f"round({f('clipping_ratio')}, 3)",
         ),
-        F.when(
-            decoded & (F.abs(s.getField("dc_offset")) > dc_max),
-            F.concat(
-                F.lit("audio_dc_offset("),
-                F.round(s.getField("dc_offset"), 3).cast("string"),
-                F.lit(")"),
-            ),
+        label(
+            f"abs({f('dc_offset')}) > {lit(dc_max)}",
+            "audio_dc_offset",
+            f"round({f('dc_offset')}, 3)",
         ),
-        F.when(
-            decoded & (s.getField("silence_ratio") > silence_max),
-            F.concat(
-                F.lit("audio_silent("),
-                F.round(s.getField("silence_ratio"), 3).cast("string"),
-                F.lit(")"),
-            ),
+        label(
+            f"{f('silence_ratio')} > {lit(silence_max)}",
+            "audio_silent",
+            f"round({f('silence_ratio')}, 3)",
         ),
-    )
-    joined = F.array_join(F.filter(labels, lambda c: c.isNotNull()), ";")
-    return F.when(joined != "", joined)
+    ]
+    joined = f"array_join(filter(array({', '.join(labels)}), x -> x IS NOT NULL), ';')"
+    return f"nullif({joined}, '')"
 
 
 def run_quality_checks(

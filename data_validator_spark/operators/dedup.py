@@ -16,8 +16,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from data_validator_spark.functions.sqltext import ident, lit, project
 
 
 def first_wins(
@@ -32,6 +34,20 @@ def first_wins(
     return out.filter(F.col("_rn") == 1).drop("_rn")
 
 
+def duplicate_label(
+    keys: Sequence[str], order_col: str, label: str = "duplicate_clip_id"
+) -> Column:
+    """`label(key)` on every occurrence of a key after the first by
+    `order_col`, NULL on the first: one window expression, as SQL text."""
+    part = ", ".join(ident(k) for k in keys)
+    key_str = ", ".join(f"CAST({ident(k)} AS STRING)" for k in keys)
+    return F.expr(
+        f"CASE WHEN row_number() OVER (PARTITION BY {part} "
+        f"ORDER BY {ident(order_col)} ASC) > 1 "
+        f"THEN concat({lit(label + '(')}, concat_ws(':', {key_str}), ')') END"
+    )
+
+
 def flag_duplicates(
     df: DataFrame,
     keys: Sequence[str],
@@ -40,13 +56,7 @@ def flag_duplicates(
 ) -> DataFrame:
     """Soft-rule form: first occurrence stays clean, later occurrences
     get a `label(key)` message column `_dup_label` (NULL when clean)."""
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).asc())
-    rn = F.row_number().over(w)
-    key_str = F.concat_ws(":", *[F.col(k).cast("string") for k in keys])
-    return df.withColumn(
-        "_dup_label",
-        F.when(rn > 1, F.concat(F.lit(label + "("), key_str, F.lit(")"))),
-    )
+    return df.withColumn("_dup_label", duplicate_label(keys, order_col, label))
 
 
 def winner_selection(
@@ -73,46 +83,44 @@ def winner_selection(
     (firestore_services.py:269-290).
 
     Adds columns: is_winner, dedup_msg, <suffixed_col> (rewritten).
-    One shuffle on `keys` (all windows share the partitioning).
+    One shuffle on `keys` (all windows share the partitioning). Built
+    as two projections of SQL text: the group windows, then the
+    verdict columns (the suffix window partitions on the verdict, so
+    it cannot share the first projection).
     """
     suffixed_col = suffixed_col or id_col
-    comp = F.coalesce(F.col(complete_col), F.lit(False))
-    ts = F.coalesce(F.col(time_col), F.lit("1970-01-01").cast("timestamp"))
-
-    w = Window.partitionBy(*keys)
+    cols = df.columns
+    part = ", ".join(ident(k) for k in keys)
+    comp = f"coalesce({ident(complete_col)}, false)"
+    ts = f"coalesce({ident(time_col)}, CAST('1970-01-01' AS TIMESTAMP))"
+    idc = ident(id_col)
     # id tiebreak keeps the pick deterministic under equal timestamps
-    w_pick = w.orderBy(comp.desc(), ts.desc(), F.col(id_col).asc())
-    n_complete = F.sum(comp.cast("int")).over(w)
-    grp_n = F.count(F.lit(1)).over(w)
-    pick_rank = F.row_number().over(w_pick)
-
-    out = (
-        df.withColumn("_n_complete", n_complete)
-        .withColumn("_grp_n", grp_n)
-        .withColumn("_pick", pick_rank)
+    out = df.withColumns(
+        {
+            "_n_complete": F.expr(
+                f"sum(CAST({comp} AS INT)) OVER (PARTITION BY {part})"
+            ),
+            "_grp_n": F.expr(f"count(1) OVER (PARTITION BY {part})"),
+            "_pick": F.expr(
+                f"row_number() OVER (PARTITION BY {part} "
+                f"ORDER BY {comp} DESC, {ts} DESC, {idc} ASC)"
+            ),
+        }
     )
-    is_winner = (F.col("_grp_n") == 1) | (
-        (F.col("_n_complete") <= 1) & (F.col("_pick") == 1)
-    )
-    out = out.withColumn("is_winner", is_winner)
-    out = out.withColumn(
-        "dedup_msg",
-        F.when(
-            (F.col("_grp_n") > 1) & (F.col("_n_complete") >= 2), F.lit(multi_label)
-        ).when((F.col("_grp_n") > 1) & ~F.col("is_winner"), F.lit(dup_label)),
-    )
+    is_winner = "(_grp_n = 1 OR (_n_complete <= 1 AND _pick = 1))"
     # suffix targets: losers, or everyone in the >=2-completed branch
-    suffix_target = (F.col("_grp_n") > 1) & (
-        (F.col("_n_complete") >= 2) | ~F.col("is_winner")
+    sfx_t = f"(_grp_n > 1 AND (_n_complete >= 2 OR NOT {is_winner}))"
+    sfx = ident(suffixed_col)
+    sfx_rank = (
+        f"row_number() OVER (PARTITION BY {part}, {sfx_t} "
+        f"ORDER BY {ts} ASC, {idc} ASC)"
     )
-    out = out.withColumn("_sfx_t", suffix_target)
-    w_sfx = Window.partitionBy(*keys, "_sfx_t").orderBy(ts.asc(), F.col(id_col).asc())
-    sfx_rank = F.row_number().over(w_sfx)
-    out = out.withColumn(
-        suffixed_col,
-        F.when(
-            F.col("_sfx_t"),
-            F.concat(F.col(suffixed_col), F.lit(":dup"), sfx_rank.cast("string")),
-        ).otherwise(F.col(suffixed_col)),
-    )
-    return out.drop("_n_complete", "_grp_n", "_pick", "_sfx_t")
+    verdict = {
+        "is_winner": is_winner,
+        "dedup_msg": f"CASE WHEN _grp_n > 1 AND _n_complete >= 2 "
+        f"THEN {lit(multi_label)} WHEN _grp_n > 1 AND NOT {is_winner} "
+        f"THEN {lit(dup_label)} END",
+        suffixed_col: f"CASE WHEN {sfx_t} THEN concat({sfx}, ':dup', "
+        f"CAST({sfx_rank} AS STRING)) ELSE {sfx} END",
+    }
+    return project(out, cols, verdict)

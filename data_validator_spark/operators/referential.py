@@ -7,7 +7,6 @@ collapses to a semi/anti equi join (SURVEY.md §2.3 J3/J4):
 
   - orphans(fact, dim, key): fact keys with no dim row  (left anti)
   - present(fact, dim, key): fact rows with a dim row    (left semi)
-  - flag_missing_ref: soft-rule form appending a label column
 """
 
 from __future__ import annotations
@@ -15,7 +14,6 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def orphans(fact: DataFrame, dim: DataFrame, keys: Sequence[str] | str) -> DataFrame:
@@ -26,23 +24,3 @@ def orphans(fact: DataFrame, dim: DataFrame, keys: Sequence[str] | str) -> DataF
 def present(fact: DataFrame, dim: DataFrame, keys: Sequence[str] | str) -> DataFrame:
     keys = [keys] if isinstance(keys, str) else list(keys)
     return fact.join(dim.select(*keys).dropDuplicates(keys), keys, "left_semi")
-
-
-def flag_missing_ref(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    label: str,
-    flag_col: str = "_ref_label",
-) -> DataFrame:
-    """Left join against the distinct dim keyset; rows without a match
-    get `label` in `flag_col` (NULL otherwise). The keyset side is a
-    distinct projection, so for selective dims Catalyst/AQE can take
-    the broadcast path; big-big falls back to sort-merge."""
-    dimk = dim.select(F.col(key).alias(key)).dropDuplicates([key]).withColumn(
-        "_ref_hit", F.lit(True)
-    )
-    joined = fact.join(dimk, key, "left")
-    return joined.withColumn(
-        flag_col, F.when(F.col("_ref_hit").isNull(), F.lit(label))
-    ).drop("_ref_hit")

@@ -25,6 +25,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_validator_spark.functions.sqltext import ident, lit
+
 DEFAULT_QUANTILES = (0.05, 0.25, 0.5, 0.75, 0.95)
 
 
@@ -72,47 +74,28 @@ def profile(
     if quantile_method not in ("approx", "tdigest"):
         raise ValueError(f"unknown quantile_method: {quantile_method!r}")
     use_td = quantile_method == "tdigest"
-    import math
-
     lgk = min(21, max(4, math.ceil(2 * math.log2(1.04 / hll_rsd))))
-    aggs: list[Column] = [F.count(F.lit(1)).alias("_n")]
+    qs = "array(" + ", ".join(lit(float(q)) for q in quantiles) + ")"
+    structs = []
     for s in specs:
-        c = F.col(s.name)
-        aggs += [
-            F.sum(c.isNull().cast("long")).alias(f"{s.name}__nulls"),
-            F.min(c).cast("string").alias(f"{s.name}__min"),
-            F.max(c).cast("string").alias(f"{s.name}__max"),
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg(c.cast("string"), F.lit(lgk))
-            ).alias(f"{s.name}__hll"),
-        ]
+        c = ident(s.name)
+        q = "CAST(NULL AS ARRAY<DOUBLE>)"
         if s.kind == "numeric" and not use_td:
-            aggs.append(
-                F.percentile_approx(
-                    c.cast("double"), list(quantiles), 10_000
-                ).alias(f"{s.name}__q")
-            )
-    wide = df.agg(*aggs)
-    # unpivot wide row -> long rows, still fully in the plan (no collect)
-    structs = [
-        F.struct(
-            F.lit(s.name).alias("column_name"),
-            (F.col(f"{s.name}__nulls") / F.greatest(F.col("_n"), F.lit(1))).alias(
-                "null_rate"
-            ),
-            F.col(f"{s.name}__min").alias("min_val"),
-            F.col(f"{s.name}__max").alias("max_val"),
-            F.col(f"{s.name}__hll").alias("approx_distinct"),
-            (
-                F.col(f"{s.name}__q")
-                if s.kind == "numeric" and not use_td
-                else F.lit(None).cast("array<double>")
-            ).alias("quantiles"),
-            F.col("_n").alias("n_rows"),
+            q = f"percentile_approx(CAST({c} AS DOUBLE), {qs}, 10000)"
+        structs.append(
+            f"named_struct('column_name', {lit(s.name)}, "
+            f"'null_rate', sum(CAST({c} IS NULL AS BIGINT)) / greatest(count(1), 1), "
+            f"'min_val', CAST(min({c}) AS STRING), "
+            f"'max_val', CAST(max({c}) AS STRING), "
+            "'approx_distinct', "
+            f"hll_sketch_estimate(hll_sketch_agg(CAST({c} AS STRING), {lgk})), "
+            f"'quantiles', {q}, 'n_rows', count(1))"
         )
-        for s in specs
-    ]
-    out = wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    # ONE expression of SQL text: the analyzer splits it into the
+    # scalar Aggregate and a generator that unpivots its row to long
+    # rows, all in the plan (no collect). Built from Column objects it
+    # cost a dozen Py4J round trips per column.
+    out = df.selectExpr(f"inline(array({', '.join(structs)}))")
     if not use_td:
         return out
     from .tdigest import quantile_array_readout, tdigest_profile
@@ -328,17 +311,6 @@ def kll_drift(
     per_col = {r.column_name: r._probes for r in probe_rows}
     col_names = sorted(per_col)
 
-    def _sql_lit(v: float) -> str:
-        # repr is the shortest round-trip decimal; Java parses it back
-        # to the identical IEEE-754 double. Non-finite values have no
-        # numeric literal (repr gives `infD`), so they go through CAST
-        v = float(v)
-        if v != v:
-            return "CAST('NaN' AS DOUBLE)"
-        if math.isinf(v):
-            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-        return repr(v) + "D"
-
     parts: list[DataFrame] = []
     for lo in range(0, len(col_names), max(1, chunk_cols)):
         chunk = col_names[lo : lo + chunk_cols]
@@ -347,8 +319,8 @@ def kll_drift(
             # dedup probes (repeated quantiles at heavy ties) to shrink
             # the expression; order is irrelevant under max()
             gaps = [
-                f"abs(kll_sketch_get_rank_double(_kb, {_sql_lit(v)})"
-                f" - kll_sketch_get_rank_double(_kc, {_sql_lit(v)}))"
+                f"abs(kll_sketch_get_rank_double(_kb, {lit(float(v))})"
+                f" - kll_sketch_get_rank_double(_kc, {lit(float(v))}))"
                 for v in sorted(set(per_col[col_name]))
             ]
             body = gaps[0] if len(gaps) == 1 else (
@@ -383,14 +355,17 @@ def kll_drift(
     return parts[0]
 
 
+def _bucket_sql(spec: ColumnSpec) -> str:
+    c = ident(spec.name)
+    w = (spec.bucket_hi - spec.bucket_lo) / spec.n_buckets
+    raw = f"floor((CAST({c} AS DOUBLE) - {lit(spec.bucket_lo)}) / {lit(w)})"
+    return f"CAST(greatest(-1, least({raw}, {lit(spec.n_buckets)})) AS STRING)"
+
+
 def bucketize(spec: ColumnSpec) -> Column:
     """Fixed-grid bucket id for a numeric column: floor((x-lo)/w) with
     underflow/overflow buckets; NULL rows excluded by histogram()."""
-    c = F.col(spec.name).cast("double")
-    w = (spec.bucket_hi - spec.bucket_lo) / spec.n_buckets
-    raw = F.floor((c - F.lit(spec.bucket_lo)) / F.lit(w))
-    clamped = F.greatest(F.lit(-1), F.least(raw, F.lit(spec.n_buckets)))
-    return clamped.cast("string")
+    return F.expr(_bucket_sql(spec))
 
 
 def histogram(df: DataFrame, specs: Sequence[ColumnSpec]) -> DataFrame:
@@ -398,27 +373,23 @@ def histogram(df: DataFrame, specs: Sequence[ColumnSpec]) -> DataFrame:
 
     Numeric columns bucket on the spec's fixed grid (so two snapshots
     are comparable); categorical columns bucket on the value itself.
+    Built as two steps of SQL text (explode to pairs; count and
+    normalize in one aggregate).
     """
-    pairs = [
-        F.struct(
-            F.lit(s.name).alias("column_name"),
-            (
-                bucketize(s)
-                if s.kind == "numeric"
-                else F.col(s.name).cast("string")
-            ).alias("bucket"),
-        )
+    pairs = ", ".join(
+        f"named_struct('column_name', {lit(s.name)}, 'bucket', "
+        + (_bucket_sql(s) if s.kind == "numeric" else f"CAST({ident(s.name)} AS STRING)")
+        + ")"
         for s in specs
-    ]
-    exploded = df.select(F.explode(F.array(*pairs)).alias("p")).select("p.*")
-    exploded = exploded.filter(F.col("bucket").isNotNull())
-    counts = exploded.groupBy("column_name", "bucket").agg(
-        F.count(F.lit(1)).alias("cnt")
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("column_name")
-    return counts.withColumn("freq", F.col("cnt") / F.sum("cnt").over(w))
+    return (
+        df.selectExpr(f"inline(filter(array({pairs}), p -> p.bucket IS NOT NULL))")
+        .groupBy("column_name", "bucket")
+        .agg(
+            F.expr("count(1) AS cnt"),
+            F.expr("count(1) / sum(count(1)) OVER (PARTITION BY column_name) AS freq"),
+        )
+    )
 
 
 def correlation_profile(df: DataFrame, cols: Sequence[str]) -> DataFrame:

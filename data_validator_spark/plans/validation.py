@@ -8,10 +8,28 @@ audio payload checks -> per-partition verdicts + column stats + drift.
 Everything is lazy DataFrames; the caller (or the manifest runner)
 decides what to materialize. Stage order matters for cost at scale:
 rows failing metadata hard rules (missing/unknown codec, missing id)
-are diverted BEFORE the audio stage so no Python time is spent on
+are flagged BEFORE the audio stage so no Python time is spent on
 undecodable rows; the payload itself is read exactly once (scan-side
 decode; missing-payload detection happens there too) and is never
 shuffled — see run_validation's docstring.
+
+Plan-build cost: building the plan touches no data, but every DataFrame
+transformation is analysed eagerly on the JVM and every Column node
+is a Py4J round trip, so a plan built as a chain of ~100 small
+withColumn/drop/join steps cost more than a second per call. The
+plan is therefore built in a handful of projections:
+  - one decode projection (rules/compiler hard predicate + the UDF)
+    and one SQL-text projection of its outcome columns
+  - one generator select for the whole invalid side-channel
+  - one projection for the soft/warning rules plus the duplicate label
+  - one aggregate for the transcript-reference keys, one left join
+  - one message fold at the end: every later label (duplicate,
+    transcript, audio, quality, plausibility) is appended in one
+    concat_ws per message column, in the order the stages ran, which
+    is the order the chained appends used (rules/compiler.py states
+    the label-order contract)
+  - SQL-text aggregates for the verdicts, the profile (one
+    expression) and the histograms
 """
 
 from __future__ import annotations
@@ -22,24 +40,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_validator_spark.audio.checks import run_audio_checks
-from data_validator_spark.operators import dedup, drift, referential, stats
+from data_validator_spark.functions.sqltext import ident, lit
+from data_validator_spark.operators import dedup, drift, stats
 from data_validator_spark.rules import clip_rules
-from data_validator_spark.rules.compiler import append_messages, apply_rules, split_hard
+from data_validator_spark.rules.compiler import (
+    fold_messages,
+    hard_predicate,
+    hard_violation_structs,
+    rule_columns,
+    split_hard,
+    violation,
+    violation_rows,
+)
+from data_validator_spark.session import per_jvm
 
 ENTITY = "clip"
-
-
-def _bytes_missing_cols() -> list:
-    """Normalized error columns for the bytes_missing hard violation
-    (mirrors required('bytes') from clip_hard_rules; the label and
-    echoed value match hard_violations' output for that rule)."""
-    return [
-        F.lit(ENTITY).alias("entity"),
-        F.lit("bytes_missing").alias("rule"),
-        F.lit("bytes").alias("invalid_key"),
-        F.lit("null").alias("invalid_value"),
-        F.lit("audio payload").alias("expected_value"),
-    ]
 
 
 @dataclass(frozen=True)
@@ -141,15 +156,23 @@ class ValidationResult:
             df.unpersist()
 
 
+MULTI_COMPLETED = "multiple_completed_transcripts"
+_DUP_SUFFIX = r":dup\d+$"  # winner_selection's loser suffix
+
+
 def _ref_winner_transcripts(transcripts_ref: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Winner-selection over the reference transcript table.
 
-    Returns (winners, ambiguous):
-      winners   — one authoritative (clip_id, transcript) per clip
-      ambiguous — clip_ids whose group hit the >=2-completed branch
-                  (no winner exists; clips referencing them inherit
+    Returns (winners, ref_keys):
+      winners   — one authoritative (clip_id, _ref_transcript) per clip
+      ref_keys  — one row per referenced clip_id for the clip side's
+                  single left join: _ref_hit (a winner exists),
+                  _ref_multi (the group hit the >=2-completed branch:
+                  no winner exists, and clips referencing it inherit
                   `multiple_completed_transcripts`, the J6
-                  message-inheritance join of SURVEY.md §2.3)
+                  message-inheritance join of SURVEY.md §2.3) and the
+                  winner's _ref_transcript. A key is either a winner or
+                  ambiguous, never both.
     """
     w = dedup.winner_selection(
         transcripts_ref,
@@ -159,16 +182,92 @@ def _ref_winner_transcripts(transcripts_ref: DataFrame) -> tuple[DataFrame, Data
         id_col="clip_id",
         suffixed_col="clip_id",  # losers get clip_id:dupN -> drop out of join
     )
-    winners = w.filter(F.col("is_winner")).select(
-        F.col("clip_id"), F.col("transcript").alias("_ref_transcript")
+    winners = w.filter("is_winner").selectExpr("clip_id", "transcript AS _ref_transcript")
+    # ambiguous rows carry ':dupN'; strip it to recover the base id
+    ref_keys = (
+        w.filter(f"is_winner OR dedup_msg = {lit(MULTI_COMPLETED)}")
+        .groupBy(
+            F.expr(
+                "CASE WHEN is_winner THEN clip_id "
+                f"ELSE regexp_replace(clip_id, {lit(_DUP_SUFFIX)}, '') END"
+            ).alias("clip_id")
+        )
+        .agg(
+            F.expr("CASE WHEN bool_or(is_winner) THEN true END AS _ref_hit"),
+            F.expr("CASE WHEN bool_or(NOT is_winner) THEN true END AS _ref_multi"),
+            F.expr("max(CASE WHEN is_winner THEN transcript END) AS _ref_transcript"),
+        )
     )
-    ambiguous = (
-        w.filter(F.col("dedup_msg") == "multiple_completed_transcripts")
-        # recover the base id: strip the ':dupN' suffix added above
-        .select(F.regexp_replace("clip_id", r":dup\d+$", "").alias("clip_id"))
-        .dropDuplicates(["clip_id"])
+    return winners, ref_keys
+
+
+def _partition_verdicts(
+    v: DataFrame, invalid: DataFrame, cfg: ValidationConfig
+) -> DataFrame:
+    """The reference's per-table stats rollup
+    (data_validation_pipeline.py:84-118), made per-partition: one
+    aggregate per tier, joined, then one projection."""
+    part = cfg.partition_col
+    soft = v.groupBy(part).agg(
+        F.expr("count(1) AS n_rows"),
+        F.expr(f"sum(CAST(NOT valid_{ENTITY} AS BIGINT)) AS n_soft_invalid"),
+        F.expr(f"sum(CAST(warning_msg_{ENTITY} != '' AS BIGINT)) AS n_warnings"),
     )
-    return winners, ambiguous
+    hard = invalid.groupBy(part).agg(
+        F.expr(f"count(DISTINCT {ident(cfg.order_col)}) AS n_hard_invalid")
+    )
+    filled = {
+        c: f"coalesce({c}, 0)"
+        for c in ("n_rows", "n_soft_invalid", "n_warnings", "n_hard_invalid")
+    }
+    return soft.join(hard, part, "full_outer").selectExpr(
+        ident(part),
+        *[f"{sql} AS {c}" for c, sql in filled.items()],
+        f"CASE WHEN {filled['n_hard_invalid']} = 0 AND {filled['n_soft_invalid']} = 0 "
+        "THEN 'pass' ELSE 'fail' END AS status",
+        f"{lit(cfg.rule_version)} AS rule_version",
+    )
+
+
+def _clip_columns(order_col: str) -> dict:
+    """The plan's Columns that depend only on the clip rule set and
+    order_col, built once per JVM (session.per_jvm): the decode-skip
+    predicate, the hard-tier violation structs and the soft-tier
+    projection."""
+    rules = clip_rules.all_clip_rules()
+    nonbytes = [r for r in rules if r.invalid_key != "bytes"]
+    return {
+        "skip": hard_predicate(nonbytes),
+        # the non-bytes hard rules; bytes_missing from the structured
+        # audio_bytes_null flag (never by matching the CodecError
+        # message text), which covers diverted rows too; and decode
+        # failure, a hard-tier outcome discovered late
+        "violations": hard_violation_structs(nonbytes, ENTITY)
+        + [
+            violation(
+                F.col("audio_bytes_null"),
+                ENTITY,
+                "bytes_missing",
+                "bytes",
+                "'null'",
+                "audio payload",
+            ),
+            violation(
+                F.expr("audio_decode_error IS NOT NULL AND NOT audio_bytes_null"),
+                ENTITY,
+                "audio_decode_failed",
+                "bytes",
+                "audio_decode_error",
+                "decodable audio payload",
+            ),
+        ],
+        # soft/warning metadata rules (pure Column exprs) and
+        # uniqueness on clip_id (first occurrence wins, A3/A4)
+        "soft_tier": {
+            **rule_columns(rules, ENTITY),
+            "_dup_label": dedup.duplicate_label(["clip_id"], order_col),
+        },
+    }
 
 
 def run_validation(
@@ -180,53 +279,46 @@ def run_validation(
     """Payload-aware dataflow (the part that matters at 10^12 rows):
 
     The `bytes` column is read in exactly ONE map-only stage — scan ->
-    hard filter -> minimal projection -> Arrow decode UDF -> small
-    result columns — fused into the file scan, so the payload is NEVER
-    shuffled. All cross-row machinery (dedup windows, winner-selection,
-    referential joins) runs on a bytes-free projection and equi-joins
-    the small audio results back on (clip_id, order_col). Before this
-    split, the payload rode through every window/join shuffle
+    projection -> Arrow decode UDF -> small result columns — fused
+    into the file scan, so the payload is NEVER shuffled. The UDF sees
+    only (clip_id, codec, sr_hz, bytes, skip); the other non-payload
+    columns ride past it JVM-side, and `bytes` is dropped right after
+    it, so all cross-row machinery (dedup windows, winner-selection,
+    referential joins) runs on a bytes-free row set. Before this
+    design, the payload rode through every window/join shuffle
     (~4x full-table payload shuffles), which capped scaling.
 
     Input contract: (clip_id, order_col) must uniquely identify a row
-    of `clips` — order_col is the deterministic dedup ordering AND the
-    equi-join key attaching the audio results back to the bytes-free
-    metadata branch, so duplicate (clip_id, order_col) pairs would
-    cross-multiply that join. The fixture generator guarantees it
-    (ingest_seq is a global row index); external job.py inputs must
-    provide an equivalent ingestion sequence/rowid.
+    of `clips` — order_col is the deterministic dedup ordering. The
+    fixture generator guarantees it (ingest_seq is a global row
+    index); external job.py inputs must provide an equivalent
+    ingestion sequence/rowid.
     """
-    rules = clip_rules.all_clip_rules()
+    cols = per_jvm(("clip_plan", cfg.order_col), lambda: _clip_columns(cfg.order_col))
     id_cols = ["clip_id", cfg.order_col, cfg.partition_col]
     _persisted: list[DataFrame] = []
-    nonbytes = [r for r in rules if r.invalid_key != "bytes"]
+    # labels appended by the final message fold, in stage order, and
+    # the helper columns dropped with it
+    soft: list[str] = ["_dup_label"]
+    warn: list[str] = []
+    helpers: list[str] = ["_dup_label", "bytes"]
 
-    audio_res = None
     if cfg.check_audio:
-        # ---- tier 1a: non-payload hard failures -> side-channel, from
-        # a column-pruned scan that never touches `bytes`
-        from data_validator_spark.rules.compiler import hard_predicate
-
-        _, invalid = split_hard(clips.drop("bytes"), nonbytes, ENTITY, id_cols)
-
         # ---- scan-side decode: the ONLY read of `bytes` in the run —
-        # scan -> minimal projection -> Arrow UDF -> small result
-        # columns, fused into the file scan. ALL rows ride this one
-        # scan; rows already diverted by a non-bytes hard rule carry
-        # _skip_decode=true so the UDF spends no Python time on them,
-        # but their payload null-mask is still observed JVM-side
-        # (audio_bytes_null) — that is how a diverted row with a null
-        # payload still earns its bytes_missing violation (side-channel
-        # contract: one row per failed hard rule) without a second
-        # payload scan.
+        # scan -> projection -> Arrow UDF -> small result columns,
+        # fused into the file scan. ALL rows ride this one scan; rows
+        # failing a non-bytes hard rule carry _skip_decode=true so the
+        # UDF spends no Python time on them, but their payload
+        # null-mask is still observed JVM-side (audio_bytes_null) —
+        # that is how a diverted row with a null payload still earns
+        # its bytes_missing violation (side-channel contract: one row
+        # per failed hard rule) without a second payload scan.
+        front = ["clip_id", cfg.order_col]
         audio_in = clips.select(
-            "clip_id",
-            cfg.order_col,
-            cfg.partition_col,
-            "codec",
-            "sr_hz",
+            *front,
+            *[c for c in clips.columns if c not in front and c != "bytes"],
             "bytes",
-            hard_predicate(nonbytes).alias("_skip_decode"),
+            cols["skip"].alias("_skip_decode"),
         )
         if cfg.decode_partitions:
             # optional: decouple decode parallelism from file layout
@@ -277,40 +369,22 @@ def run_validation(
             lufs_min=cfg.quality_lufs_min,
             lufs_max=cfg.quality_lufs_max,
             embed_mels=cfg.quality_embed_mels,
-        ).drop("codec", "sr_hz", "bytes")
+        ).drop("bytes")
         if cfg.persist:
             audio_res = audio_res.persist()
             _persisted.append(audio_res)
 
-        # ---- tier 1b: bytes_missing, recovered from the decode stage
-        # via the structured audio_bytes_null flag (never by matching
-        # the CodecError message text); covers diverted rows too
-        bytes_missing = audio_res.filter(F.col("audio_bytes_null")).select(
-            *id_cols, *_bytes_missing_cols()
-        )
-        invalid = invalid.unionByName(bytes_missing)
-
-        # bytes-free metadata branch joins the small audio results;
-        # the join is inner on the unique (clip_id, order_col) key —
-        # see the input contract in the docstring. Diverted rows drop
-        # out on the meta side; null-payload rows are dropped here.
-        meta = clips.drop("bytes").filter(~hard_predicate(nonbytes))
-        v = meta.join(
-            audio_res.drop(cfg.partition_col, "_skip_decode"),
-            ["clip_id", cfg.order_col],
-            "inner",
-        )
-        v = v.filter(~F.col("audio_bytes_null"))
+        # ---- hard tier, one generator select over the decode stage
+        invalid = violation_rows(audio_res, id_cols, cols["violations"])
+        # diverted and null-payload rows leave the soft tier here
+        v = audio_res.filter("NOT _skip_decode AND NOT audio_bytes_null")
+        helpers += ["_skip_decode", "audio_bytes_null"]
     else:
-        ok, invalid = split_hard(clips, rules, ENTITY, id_cols)
-        v = ok
+        v, invalid = split_hard(clips, clip_rules.all_clip_rules(), ENTITY, id_cols)
 
-    # ---- tier 2: soft/warning metadata rules (pure Column exprs)
-    v = apply_rules(v, rules, ENTITY)
-
-    # ---- uniqueness on clip_id (first occurrence wins, A3/A4)
-    v = dedup.flag_duplicates(v, ["clip_id"], cfg.order_col)
-    v = append_messages(v, ENTITY, F.col("_dup_label")).drop("_dup_label")
+    # ---- tier 2: soft/warning rules and the duplicate label, one
+    # projection; decode-failed rows still count as occurrences
+    v = v.withColumns(cols["soft_tier"])
 
     ref_winners = None
     orphan_transcripts = None
@@ -319,73 +393,39 @@ def run_validation(
         # reference rows pointing at no clip, from a bytes-free
         # clip-id projection (raw transcripts_ref rows carry base ids;
         # :dupN suffixing only happens inside winner_selection)
-        clip_ids = clips.select("clip_id").dropDuplicates(["clip_id"])
         orphan_transcripts = transcripts_ref.join(
-            clip_ids, "clip_id", "left_anti"
+            clips.select("clip_id"), "clip_id", "left_anti"
         )
-        ref_winners, ambiguous = _ref_winner_transcripts(transcripts_ref)
-        # inherited dedup message (J6): clip references a transcript
-        # group with >=2 completed rows -> no authoritative transcript
-        ambiguous = ambiguous.withColumn("_ref_multi", F.lit(True))
-        v = v.join(ambiguous, "clip_id", "left")
-        v = append_messages(
-            v,
-            ENTITY,
-            F.when(F.col("_ref_multi"), F.lit("multiple_completed_transcripts")),
-        )
-        # referential: clip must have a transcript-side row (J3 anti-join form)
-        v = referential.flag_missing_ref(
-            v, ref_winners, "clip_id", "transcript_ref_missing"
-        )
-        v = append_messages(
-            v,
-            ENTITY,
-            F.when(F.col("_ref_multi").isNull(), F.col("_ref_label")),
-        ).drop("_ref_label", "_ref_multi")
-        # transcript equality vs the winning reference row
-        v = v.join(ref_winners, "clip_id", "left")
-        mismatch = F.when(
-            F.col("_ref_transcript").isNotNull()
-            & F.col("transcript").isNotNull()
-            & (F.trim("transcript") != "")
-            & (F.col("transcript") != F.col("_ref_transcript")),
-            F.lit("transcript_mismatch"),
-        )
-        v = append_messages(v, ENTITY, mismatch).drop("_ref_transcript")
+        ref_winners, ref_keys = _ref_winner_transcripts(transcripts_ref)
+        v = v.join(ref_keys, "clip_id", "left")
+        soft += [
+            # inherited dedup message (J6): no authoritative transcript
+            f"CASE WHEN _ref_multi THEN {lit(MULTI_COMPLETED)} END",
+            # referential (J3 anti-join form): no transcript-side row
+            "CASE WHEN _ref_multi IS NULL AND _ref_hit IS NULL "
+            "THEN 'transcript_ref_missing' END",
+            # transcript equality vs the winning reference row
+            "CASE WHEN _ref_transcript IS NOT NULL AND transcript IS NOT NULL "
+            "AND trim(transcript) != '' AND transcript != _ref_transcript "
+            "THEN 'transcript_mismatch' END",
+        ]
+        helpers += ["_ref_hit", "_ref_multi", "_ref_transcript"]
 
     # ---- tier 3: audio-invariant outcomes (results precomputed in the
     # scan-side decode stage; only small columns are handled here)
     if cfg.check_audio:
-        # decode failure is a hard-tier outcome discovered late: divert.
-        # Sourced from audio_res (not v) so a decode-failed row's
-        # violation survives even though dedup/ref joins ran on v.
-        decode_invalid = audio_res.filter(
-            F.col("audio_decode_error").isNotNull() & ~F.col("audio_bytes_null")
-        ).select(
-            *id_cols,
-            F.lit(ENTITY).alias("entity"),
-            F.lit("audio_decode_failed").alias("rule"),
-            F.lit("bytes").alias("invalid_key"),
-            F.col("audio_decode_error").alias("invalid_value"),
-            F.lit("decodable audio payload").alias("expected_value"),
-        )
-        invalid = invalid.unionByName(decode_invalid)
+        # decode failures went to the side-channel above
         v = v.filter(F.col("audio_decode_error").isNull())
-        v = append_messages(v, ENTITY, F.col("_snr_label")).drop("_snr_label")
-        v = append_messages(
-            v, ENTITY, F.col("_container_sr_label"), warning=True
-        ).drop("_container_sr_label")
+        soft.append("_snr_label")
         # metadata-tier codecs (opus): container checks were REAL and
         # passed, but the SNR invariant could not be evaluated — an
         # honest warning, never a synthetic pass (and never a hard
         # fail: the clip may be perfectly fine)
-        v = append_messages(
-            v, ENTITY, F.col("_pcm_unsupported_label"), warning=True
-        ).drop("_pcm_unsupported_label")
+        warn += ["_container_sr_label", "_pcm_unsupported_label"]
+        helpers += ["_snr_label", "_container_sr_label", "_pcm_unsupported_label"]
         if cfg.check_quality:
-            v = append_messages(v, ENTITY, F.col("_quality_labels")).drop(
-                "_quality_labels"
-            )
+            soft.append("_quality_labels")
+            helpers.append("_quality_labels")
     if cfg.check_plausibility:
         from data_validator_spark.operators.plausibility import (
             transcript_plausibility,
@@ -403,50 +443,27 @@ def run_validation(
             wps_max=cfg.wps_max,
             speech_share_min=cfg.speech_share_min,
         )
-        v = append_messages(v, ENTITY, F.col("_wps_label")).drop("_wps_label")
-        if with_quality:
-            v = append_messages(v, ENTITY, F.col("_speech_label")).drop(
-                "_speech_label"
-            )
-    # bytes is a no-op drop when check_audio (never joined back);
-    # audio_bytes_null is all-false on the validated side by now
-    v = v.drop("bytes", "audio_bytes_null")
+        labels = ["_wps_label"] + (["_speech_label"] if with_quality else [])
+        soft += labels
+        helpers += labels
+    # ---- one message fold for every label above, then the helpers go
+    # (`bytes` is only present when check_audio is off)
+    v = fold_messages(v, ENTITY, soft, warn, drop=helpers)
     if cfg.persist:
+        # `invalid` is one projection over the persisted decode stage
+        # when check_audio, so it needs no cache of its own
         v = v.persist()
         _persisted.append(v)
-        # violation rows are tiny but their lineage re-scans the full
-        # input (incl. `bytes` for the required-field rule); caching
-        # them keeps every downstream action scan-free
-        invalid = invalid.persist()
-        _persisted.append(invalid)
+        if not cfg.check_audio:
+            invalid = invalid.persist()
+            _persisted.append(invalid)
 
-    # ---- per-partition verdicts (the reference's per-table stats
-    # rollup, data_validation_pipeline.py:84-118, made per-partition)
-    part = cfg.partition_col
-    soft_counts = v.groupBy(part).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum((~F.col(f"valid_{ENTITY}")).cast("long")).alias("n_soft_invalid"),
-        F.sum((F.col(f"warning_msg_{ENTITY}") != "").cast("long")).alias("n_warnings"),
-    )
-    hard_counts = invalid.groupBy(part).agg(
-        F.count_distinct(cfg.order_col).alias("n_hard_invalid")
-    )
-    verdicts = (
-        soft_counts.join(hard_counts, part, "full_outer")
-        .fillna(0, subset=["n_rows", "n_soft_invalid", "n_warnings", "n_hard_invalid"])
-        .withColumn(
-            "status",
-            F.when(
-                (F.col("n_hard_invalid") == 0) & (F.col("n_soft_invalid") == 0),
-                F.lit("pass"),
-            ).otherwise(F.lit("fail")),
-        )
-        .withColumn("rule_version", F.lit(cfg.rule_version))
-    )
+    verdicts = _partition_verdicts(v, invalid, cfg)
 
     # ---- column stats + histograms (single-pass each, SURVEY §2.4 A5/A10/A11)
-    summary = stats.profile(clips.drop("bytes"), list(cfg.stats_specs))
-    hist = stats.histogram(clips.drop("bytes"), list(cfg.hist_specs))
+    meta = clips.drop("bytes")
+    summary = stats.profile(meta, list(cfg.stats_specs))
+    hist = stats.histogram(meta, list(cfg.hist_specs))
 
     drift_df = None
     if baseline_hist is not None:

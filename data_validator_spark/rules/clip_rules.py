@@ -19,6 +19,7 @@ from data_validator_spark.rules.spec import (
     bounds,
     required,
 )
+from data_validator_spark.session import per_jvm
 
 # mirrors the reference rt defaults/overrides shape
 # (core_models.py:169-202: defaults 100/10000; matrix-reasoning 300/60000)
@@ -89,4 +90,14 @@ def clip_warning_rules() -> list[Rule]:
 
 
 def all_clip_rules() -> list[Rule]:
-    return clip_hard_rules() + clip_soft_rules() + clip_warning_rules()
+    """Every clip rule, in tier order. The rule Columns are built once
+    per JVM, on the first call (session.per_jvm), and reused: rebuilding
+    them costs hundreds of Py4J round trips per plan. Rules hold
+    unresolved expressions only, so they are valid for every session
+    of that JVM. Each call returns a fresh list because callers filter
+    it."""
+    rules = per_jvm(
+        "clip_rules",
+        lambda: clip_hard_rules() + clip_soft_rules() + clip_warning_rules(),
+    )
+    return list(rules)

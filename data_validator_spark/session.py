@@ -10,8 +10,11 @@ session timezone (reference coerces all timestamps to UTC,
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def build_session(
@@ -54,3 +57,22 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_PER_JVM: dict = {}
+
+
+def per_jvm(key, build: Callable[[], T]) -> T:
+    """`build()` once per JVM and `key`, on first use (never at import
+    or session build). For Python objects that hold JVM references —
+    Columns, UDFs — which stay valid for every session of the JVM that
+    made them: rebuilding them per plan costs Py4J round trips (a
+    pandas UDF also re-pickles its closure). A new gateway (a JVM
+    relaunched in the same process) rebuilds."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    hit = _PER_JVM.get(key)
+    if hit is None or hit[0] is not gateway:
+        hit = _PER_JVM[key] = (gateway, build())
+    return hit[1]

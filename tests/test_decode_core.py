@@ -116,6 +116,28 @@ def test_check_udf_sentinels_and_metadata_tier():
         assert quality == ("silence_ratio" in ok)
 
 
+def test_check_udf_out_of_range_rate_is_a_row_error():
+    """A WAV whose fmt rate field says 3,000,000,000 decodes, but its
+    rate does not fit the INT container_sr field: that row gets a
+    decode_error and every field's fill value, the batch survives."""
+    wav = bytearray(codecs.encode("pcm16", synth.reference_pcm("big", SR, N), SR))
+    wav[24:28] = (3_000_000_000).to_bytes(4, "little")
+    pdf = pd.DataFrame(
+        [
+            ("ok", "pcm16", codecs.encode("pcm16", synth.reference_pcm("ok", SR, N), SR)),
+            ("big", "pcm16", bytes(wav)),
+        ],
+        columns=["clip_id", "codec", "bytes"],
+    )
+    pdf["sr_hz"] = SR
+    out = _run(make_audio_check_udf(), pdf)
+    big = out["big"]
+    assert big["decode_error"] == "container_sr out of int32 range: 3000000000"
+    assert big["container_sr"] == -1 and big["n_samples"] == -1
+    assert math.isnan(big["snr_db"]) and not big["pcm_unsupported"]
+    assert out["ok"]["decode_error"] is None and out["ok"]["container_sr"] == SR
+
+
 def test_report_udf_sentinels_on_decode_errors():
     pdf = _batch(with_skip=False)
     errors = ("null", "trunc", "unknown", "opus_ok", "opus_bad", "plugin")

@@ -157,6 +157,17 @@ def test_inspect_mapping_family_rules():
     )["error"]
 
 
+def test_head_mapping_table_exact_length():
+    """Families 1 and 255 hold OpusHead to exactly 21 + channels bytes,
+    as family 0 is held to 19: trailing bytes are a structural error."""
+    for family, channels, table in ((1, 2, [1, 1, 0, 1]), (255, 3, [3, 0, 0, 1, 2])):
+        head = b"OpusHead" + struct.pack("<BBHIhB", 1, channels, 312, 48000, 0, family)
+        head += bytes(table)
+        assert opus._parse_head(head)["mapping_family"] == family
+        with pytest.raises(opus.OpusError, match="1 bytes after the channel mapping table"):
+            opus._parse_head(head + b"\x00")
+
+
 def test_inspect_opustags_rules():
     """RFC 7845 §5.2: comment-length overflow, missing '=', invalid key
     charset, and non-UTF-8 payloads are all container rejects; a valid

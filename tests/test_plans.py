@@ -247,3 +247,69 @@ def test_loudness_and_align_payload_never_shuffled(spark, clips):
             assert "bytes" not in cols, (op.__name__, keys, cols)
         scans = _scans(_plan(df))
         assert any("bytes" in s for s in scans), (op.__name__, scans)
+
+
+_BASE = [
+    "clip_id:string", "ingest_seq:bigint", "sr_hz:int", "dur_ms:int",
+    "codec:string", "transcript:string", "ingest_date:date",
+]
+_QUALITY = [
+    "clipping_ratio:double", "dc_offset:double", "rms_db:double",
+    "silence_ratio:double", "dominant_freq_hz:double",
+    "spectral_flatness:double", "bandwidth_hz:double",
+    "effective_bits:double", "loudness_lufs:double",
+]
+_AUDIO_MSG = [
+    "audio_decode_error:string", "audio_snr_db:double",
+    "audio_n_samples:bigint", "audio_container_sr:int",
+    "validation_msg_clip:string", "warning_msg_clip:string", "valid_clip:boolean",
+]
+_OUTPUTS = {
+    "invalid": _BASE[:2] + ["ingest_date:date", "entity:string", "rule:string",
+                            "invalid_key:string", "invalid_value:string",
+                            "expected_value:string"],
+    "partition_verdicts": [
+        "ingest_date:date", "n_rows:bigint", "n_soft_invalid:bigint",
+        "n_warnings:bigint", "n_hard_invalid:bigint", "status:string",
+        "rule_version:string",
+    ],
+    "summary_stats": [
+        "column_name:string", "null_rate:double", "min_val:string",
+        "max_val:string", "approx_distinct:bigint", "quantiles:array<double>",
+        "n_rows:bigint",
+    ],
+    "histograms": ["column_name:string", "bucket:string", "cnt:bigint", "freq:double"],
+}
+_REF_OUTPUTS = {
+    "ref_winners": ["clip_id:string", "_ref_transcript:string"],
+    "orphan_transcripts": [
+        "clip_id:string", "transcript:string", "updated_at:timestamp",
+        "is_complete:boolean",
+    ],
+}
+
+
+def test_output_schemas_pinned(spark, clips, transcripts_ref):
+    """Names in order, with types, of every run_validation output, with
+    quality off and on and with and without transcripts_ref. Plans are
+    only built and analysed (no Spark job)."""
+
+    def fields(df):
+        return [f"{f.name}:{f.dataType.simpleString()}" for f in df.schema.fields]
+
+    cases = [
+        (ValidationConfig(), transcripts_ref, _BASE + _AUDIO_MSG),
+        (ValidationConfig(check_quality=True), transcripts_ref, _BASE + _QUALITY + _AUDIO_MSG),
+        (
+            ValidationConfig(check_quality=True, check_plausibility=True),
+            None,
+            _BASE + _QUALITY + _AUDIO_MSG + ["words:bigint", "wps:double", "speech_share:double"],
+        ),
+    ]
+    for cfg, ref, validated in cases:
+        res = run_validation(clips, ref, cfg=cfg)
+        assert fields(res.validated) == validated, cfg
+        expected = dict(_OUTPUTS, **(_REF_OUTPUTS if ref is not None else {}))
+        for name, cols in expected.items():
+            assert fields(getattr(res, name)) == cols, (cfg, name)
+        assert (res.ref_winners is None) == (ref is None)

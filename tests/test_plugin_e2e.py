@@ -149,6 +149,13 @@ def test_metadata_inspector_plugin_end_to_end(spark):
             sr_hz=SR,
             bytes=bytearray(b"\x01"),
         ),
+        # a container that declares no rate keeps the -1 sentinel
+        Row(
+            clip_id="meta-nosr",
+            codec="metaplug",
+            sr_hz=SR,
+            bytes=bytearray((0).to_bytes(4, "little") + (200).to_bytes(4, "little")),
+        ),
     ]
     out = run_audio_checks(
         spark.createDataFrame(rows),
@@ -168,6 +175,11 @@ def test_metadata_inspector_plugin_end_to_end(spark):
     assert ok["_container_sr_label"] is None  # container sr == sr_hz
     bad = by_id["meta-bad"]
     assert bad["audio_decode_error"] == "metaplug: truncated header"
+    # no declared rate is no rate mismatch (never `bytes_sr_mismatch(-1)`)
+    nosr = by_id["meta-nosr"]
+    assert nosr["audio_container_sr"] == -1
+    assert nosr["_pcm_unsupported_label"] == "audio_codec_unsupported_pcm(metaplug)"
+    assert nosr["_container_sr_label"] is None
 
 
 def test_metadata_inspector_registry_path():
