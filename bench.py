@@ -13,11 +13,14 @@ timings and overflowed the driver's stdout-tail capture):
   * stdout: exactly ONE COMPACT JSON line as the LAST line —
     {"metric", "value", "unit", "sf", "cores", "clips_per_sec",
      "clips_per_sec_cold", "clips_per_sec_warm", "clips_rows",
-     "n_queries", "n_failed_queries", "queries_top5", "detail"} —
+     "n_queries", "n_failed_queries", "queries_top5",
+     "queries_warm_total_sec", "detail"} —
     bounded size regardless of how many queries exist.
   * full per-query decomposition (the old giant dict, plus the
     multi-scale throughput curve) is written to BENCH_full.json
-    at the repo root and committed every round.
+    at the repo root and committed every round. Each query runs
+    twice: "queries" keeps the first (cold) time per query, as
+    before, and "queries_warm" the second.
 
 --clips-only mode: times only the clips pipeline at a given core
 count; used by tools/scaling_bench.py to evidence the north rule's
@@ -189,20 +192,28 @@ def time_clips_validation(spark, paths: dict, rows: int, cores: int, repeats: in
     }
 
 
-def time_queries(spark, sf_dir: str) -> dict[str, float]:
+def time_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, float]]:
+    """Cold and warm seconds per query: each query runs twice back to
+    back. The warm run reuses the plan's generated classes (the codegen
+    cache is sized to hold them, see session.py), so it times execution
+    without Janino; the cold run also pays compiling them. -1.0 marks a
+    failed run."""
     import __spark_entry__ as entry
 
-    out: dict[str, float] = {}
+    cold: dict[str, float] = {}
+    warm: dict[str, float] = {}
     for name, fn in entry.queries().items():
-        t0 = time.monotonic()
         try:
-            n = len(fn(spark, sf_dir).collect())
-            out[name] = round(time.monotonic() - t0, 3)
-            log(f"  {name}: {out[name]}s ({n} rows)")
+            for out in (cold, warm):
+                t0 = time.monotonic()
+                n = len(fn(spark, sf_dir).collect())
+                out[name] = round(time.monotonic() - t0, 3)
+            log(f"  {name}: cold {cold[name]}s, warm {warm[name]}s ({n} rows)")
         except Exception as e:  # keep the bench robust to one bad query
-            out[name] = -1.0
+            cold.setdefault(name, -1.0)
+            warm[name] = -1.0
             log(f"  {name}: FAILED {e}")
-    return out
+    return cold, warm
 
 
 _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
@@ -238,6 +249,7 @@ def compact_summary(result: dict) -> dict:
             "metric", "value", "unit", "sf", "cores", "executors",
             "clips_rows", "clips_sec", "clips_sec_cold", "clips_sec_warm",
             "clips_per_sec", "clips_per_sec_cold", "clips_per_sec_warm",
+            "queries_warm_total_sec",
         )
         if k in result
     }
@@ -353,7 +365,7 @@ def main() -> None:
 
         if not args.clips_only:
             log(f"timing headline queries at {sf_dir}")
-            q = time_queries(spark, sf_dir)
+            q, q_warm = time_queries(spark, sf_dir)
             total = round(sum(v for v in q.values() if v >= 0), 3)
             result.update(
                 {
@@ -361,6 +373,10 @@ def main() -> None:
                     "value": total,
                     "unit": "sec",
                     "queries": q,
+                    "queries_warm": q_warm,
+                    "queries_warm_total_sec": round(
+                        sum(v for v in q_warm.values() if v >= 0), 3
+                    ),
                 }
             )
         else:

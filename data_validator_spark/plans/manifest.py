@@ -71,7 +71,13 @@ class CheckpointManifest:
         path = jvm.org.apache.hadoop.fs.Path(self.path)
         fs = path.getFileSystem(conf)
         if not fs.exists(path):
-            return spark.createDataFrame([], _MANIFEST_SCHEMA)
+            # the false filter makes it an empty LocalRelation once
+            # optimized, so Catalyst prunes every plan over a missing
+            # manifest statically. A bare empty createDataFrame is an
+            # RDD scan that AQE finds empty only at run time, in a race
+            # with the other side of the join, so the plan (and its
+            # generated classes) changed from one run to the next.
+            return spark.createDataFrame([], _MANIFEST_SCHEMA).where(F.lit(False))
         return spark.read.parquet(self.path)
 
     def latest(self, spark: SparkSession) -> DataFrame:

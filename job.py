@@ -24,6 +24,12 @@ Payload keys (all optional except clips_path):
                         ValidationConfig overrides
 
 Build engine.zip:  cd repo && zip -r engine.zip data_validator_spark
+
+Spark settings: the job fills every key of the engine's conf
+(`data_validator_spark.session.ENGINE_CONF`: AQE, UTC, Arrow, the
+512-row batch caps, the codegen cache settings, UI off) that
+spark-submit did not set, so an explicit `--conf` (or
+spark-defaults.conf) wins.
 """
 
 from __future__ import annotations
@@ -32,6 +38,15 @@ import argparse
 import json
 import sys
 import time
+from collections.abc import Mapping
+
+
+def engine_conf_defaults(submitted: Mapping[str, str]) -> dict[str, str]:
+    """The engine's settings for every key `submitted` (spark-submit's
+    resolved conf) does not set."""
+    from data_validator_spark.session import ENGINE_CONF
+
+    return {k: v for k, v in ENGINE_CONF.items() if k not in submitted}
 
 
 def main() -> int:
@@ -41,13 +56,22 @@ def main() -> int:
     with open(args.payload) as f:
         payload = json.load(f)
 
+    from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
 
     from data_validator_spark.plans.manifest import CheckpointManifest, run_resumable
     from data_validator_spark.plans.validation import ValidationConfig
 
-    # spark-submit provides master/conf; getOrCreate attaches to it
-    spark = SparkSession.builder.appName("data_validator_spark_job").getOrCreate()
+    # spark-submit provides master/conf as system properties of the JVM
+    # it launched; SparkConf() reads them once the gateway is up. The
+    # builder's settings override them, so pass only the unset keys,
+    # before the context starts (the codegen cache size is static).
+    SparkContext._ensure_initialized()
+    spark = (
+        SparkSession.builder.appName("data_validator_spark_job")
+        .config(map=engine_conf_defaults(dict(SparkConf().getAll())))
+        .getOrCreate()
+    )
 
     cfg = ValidationConfig(
         partition_col=payload.get("partition_col", "ingest_date"),
