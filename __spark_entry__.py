@@ -2140,17 +2140,19 @@ def q70_video_features(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q71_tdigest_quantiles(spark: SparkSession, sf: str) -> DataFrame:
-    """REAL mergeable t-digest (operators/tdigest.py — the north
-    star's 't-digest' quantile surface): map-side partial sketches per
-    Arrow batch, sketch-only merge shuffle, k1-scale clustering.
-    Gate: every estimate must land BETWEEN the exact (p-0.02) and
-    (p+0.02) quantiles — the rank-error guarantee t-digests make —
-    checked globally and per l_returnflag group; the exact brackets
+    """Mergeable quantile sketch (stats.kll_quantiles — the north
+    star's 't-digest/approx quantile' surface, carried by the engine's
+    one sketch family, DataSketches KLL): a partial sketch per group
+    and partition, a sketch-only merge shuffle, quantiles read off the
+    merged sketch. Gate: every estimate must land BETWEEN the exact
+    (p-0.02) and (p+0.02) quantiles — a rank-error statement, the
+    guarantee KLL makes with a worst-case bound — checked globally and
+    per l_returnflag group; the exact brackets
     themselves are computed by Spark's F.percentile and must
     hash-match DuckDB's quantile_cont cross-engine (both interpolate
     on rank (n-1)p), so the boolean is anchored to
     independently-verified ground truth."""
-    from data_validator_spark.operators.tdigest import tdigest_quantiles
+    from data_validator_spark.operators.stats import kll_quantiles
 
     li = _t(spark, sf, "lineitem")
     probs = [0.01, 0.5, 0.99]
@@ -2159,13 +2161,11 @@ def q71_tdigest_quantiles(spark: SparkSession, sf: str) -> DataFrame:
     for p in probs:
         bounds += [max(0.0, p - eps), min(1.0, p + eps)]
 
-    est_g = tdigest_quantiles(li, "l_extendedprice", probs).withColumn(
+    est_g = kll_quantiles(li, "l_extendedprice", probs).withColumn(
         "scope", F.lit("all")
     )
     est_r = (
-        tdigest_quantiles(
-            li, "l_extendedprice", probs, group_by=["l_returnflag"]
-        )
+        kll_quantiles(li, "l_extendedprice", probs, group_by=["l_returnflag"])
         .withColumn("scope", F.concat(F.lit("rf:"), F.col("l_returnflag")))
         .drop("l_returnflag")
     )
@@ -2221,8 +2221,8 @@ def q71_tdigest_quantiles(spark: SparkSession, sf: str) -> DataFrame:
 
 def q72_sketch_drift(spark: SparkSession, sf: str) -> DataFrame:
     """Raw-data-free drift: KS + PSI computed from two snapshots'
-    persisted t-digest sketch tables alone (drift.sketch_drift over
-    tdigest_profile output — the north star's KS/PSI drift surface at
+    persisted KLL sketch tables alone (drift.sketch_drift over
+    stats.kll_sketches output — the north star's KS/PSI drift surface at
     the 10^12-row price point: O(columns) per comparison, not O(rows)).
     Two planted columns: v_drift (affine-shifted current snapshot,
     real drift) and v_same (disjoint halves of the same distribution,
@@ -2230,8 +2230,7 @@ def q72_sketch_drift(spark: SparkSession, sf: str) -> DataFrame:
     by BOTH engines (window cumsums / fixed-grid buckets) and must
     hash-match; the sketch estimates must land within ±0.02 (KS) /
     ±0.05 (PSI) of them — tolerance booleans, oracle emits TRUE."""
-    from data_validator_spark.operators import drift
-    from data_validator_spark.operators.tdigest import tdigest_profile
+    from data_validator_spark.operators import drift, stats
 
     ev = _t(spark, sf, "events")
     base = ev.filter(F.col("event_id") % 2 == 0).select(
@@ -2242,8 +2241,8 @@ def q72_sketch_drift(spark: SparkSession, sf: str) -> DataFrame:
         F.col("value").alias("v_same"),
     )
     est = drift.sketch_drift(
-        tdigest_profile(base, ["v_drift", "v_same"]),
-        tdigest_profile(cur, ["v_drift", "v_same"]),
+        stats.kll_sketches(base, ["v_drift", "v_same"]),
+        stats.kll_sketches(cur, ["v_drift", "v_same"]),
     )
 
     cols = ["v_drift", "v_same"]
@@ -2317,9 +2316,10 @@ def q72_sketch_drift(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q73_profile_tdigest(spark: SparkSession, sf: str) -> DataFrame:
-    """Column profile with quantile_method='tdigest' (stats.profile —
+    """Column profile with quantile_method='kll' (stats.profile —
     the north star names 't-digest/approx_percentile'; this gates the
-    t-digest arm of that disjunction inside the profiler). Gate: each
+    mergeable-sketch arm of that disjunction inside the profiler, read
+    off a KLL sketch in the profile's one Aggregate). Gate: each
     estimated quantile's exact MID-RANK — (#below + ½·#equal)/n,
     tie-robust — must land within ±0.03 of its target probability;
     the oracle replays the exact row counts and emits TRUE."""
@@ -2332,7 +2332,7 @@ def q73_profile_tdigest(spark: SparkSession, sf: str) -> DataFrame:
         stats.ColumnSpec("l_returnflag", "categorical"),
     ]
     probs = list(stats.DEFAULT_QUANTILES)
-    prof = stats.profile(li, specs, quantile_method="tdigest")
+    prof = stats.profile(li, specs, quantile_method="kll")
     est = (
         prof.filter(F.col("quantiles").isNotNull())
         .select(
@@ -2472,7 +2472,7 @@ def q75_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
 
 def q76_snapshot_compare(spark: SparkSession, sf: str) -> DataFrame:
     """Snapshot store round-trip (plans/snapshots.py): capture two
-    snapshots (profile + fixed-grid histograms + t-digest sketches) to
+    snapshots (profile + fixed-grid histograms + KLL sketches) to
     a throwaway parquet root, then compare() from PERSISTED STATE ONLY
     — the north star's drift-against-a-baseline-snapshot loop. The
     histogram KS/PSI and per-side row counts are deterministic and
@@ -2547,16 +2547,16 @@ def q76_snapshot_compare(spark: SparkSession, sf: str) -> DataFrame:
 def q77_streaming_sketch(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming sketch monitor (streaming/sketch_monitor.py): two
     arrival waves land in a watched directory; an availableNow run
-    appends t-digest partials per micro-batch; a resume run with
-    nothing new must append NOTHING (streaming checkpoint); the merged
-    running snapshot's quantiles must land inside exact (p∓0.02) rank
+    appends KLL sketch partials per micro-batch; a resume run with
+    nothing new must append NOTHING (streaming checkpoint); the
+    running snapshot (partials merged with kll_merge_agg_double) must
+    read quantiles inside exact (p∓0.02) rank
     brackets over the UNION of both waves — brackets computed by
     Spark's F.percentile and hash-matched against DuckDB's
     quantile_cont (both interpolate on rank (n−1)p, q71 precedent)."""
     import shutil
     import tempfile
 
-    from data_validator_spark.operators.tdigest import quantile_from_sketch
     from data_validator_spark.streaming import sketch_monitor as sm
 
     ev = _t(spark, sf, "events").filter(F.col("value").isNotNull())
@@ -2576,11 +2576,19 @@ def q77_streaming_sketch(spark: SparkSession, sf: str) -> DataFrame:
         resume_ok = spark.read.parquet(f"{state}/partials").count() == n1
         wave2.write.mode("append").parquet(in_dir)
         sm.run_sketch_monitor(spark, in_dir, state, ["v"], "v double").awaitTermination(180)
-        sk = sm.current_sketches(spark, state).collect()[0].asDict()
+        probs = [0.1, 0.5, 0.9]
+        ests = (
+            sm.current_sketches(spark, state)
+            .select(
+                F.kll_sketch_get_quantile_double(
+                    "kll", F.array(*[F.lit(p) for p in probs])
+                )
+            )
+            .first()[0]
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    probs = [0.1, 0.5, 0.9]
     eps = 0.02
     bounds = []
     for p in probs:
@@ -2590,7 +2598,6 @@ def q77_streaming_sketch(spark: SparkSession, sf: str) -> DataFrame:
         F.percentile(F.col("v"), bounds).alias("qs"),
         F.count(F.lit(1)).alias("n"),
     ).first()
-    ests = quantile_from_sketch(sk, probs)
     out = []
     for j, p in enumerate(probs):
         lo, hi = row.qs[2 * j], row.qs[2 * j + 1]
@@ -2870,8 +2877,8 @@ def q80_theta_membership(spark: SparkSession, sf: str) -> DataFrame:
 
 def q81_kll_drift(spark: SparkSession, sf: str) -> DataFrame:
     """Native KLL quantile-sketch KS drift (stats.kll_sketches /
-    kll_drift): the fully-JVM DataSketches alternative to the Python
-    t-digest path (q72) — per column, one kll_sketch_agg_double
+    kll_drift): the KS-only read-out of the sketch tables q72 gates
+    with PSI too — per column, one kll_sketch_agg_double
     sketch per snapshot side, KS estimated as the max rank gap over
     the merged sketch's quantile grid. v_drift gets an affine shift
     (real drift), v_same is the even/odd split of one distribution

@@ -12,7 +12,7 @@ are the oracle gate (q84): overestimate-only is structural (counts
 only ever add), the epsilon bound holds deterministically at the
 fixed seed.
 
-Distributed shape (same as the t-digest/MG partials in this repo):
+Distributed shape (same as the Misra–Gries partials in this repo):
 map-side partials build one depth x width int64 matrix per
 partition — value_counts per chunk, unique items hashed once,
 np.add.at scatter — and emit the matrix as depth*width (idx, cnt)
@@ -20,7 +20,7 @@ rows ONCE per partition; the shuffle carries only sketch cells
 (depth*width rows per partition, independent of data size), and the
 merge is a plain groupBy-sum on idx because CMS merge IS elementwise
 addition. The merged table (idx, cnt) is a persistable snapshot —
-store it next to the t-digest/HLL snapshot state (plans/snapshots)
+store it next to the KLL/HLL snapshot state (plans/snapshots)
 and point-query historical baselines without the raw data.
 
 Point queries are relational too: each key expands to `depth` probe

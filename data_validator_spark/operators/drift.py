@@ -8,7 +8,9 @@ requires (KS / PSI on dur_ms, sr_hz, codec frequencies).
 Everything is DataFrame arithmetic over the histogram tables produced
 by operators.stats.histogram — a full-outer join on (column, bucket)
 plus window cumsums. No driver-side math, so baselines of any width
-scale.
+scale. `sketch_drift` answers the same questions from two persisted
+KLL sketch tables (stats.kll_sketches) instead, through
+stats.kll_drift's evaluator.
 """
 
 from __future__ import annotations
@@ -17,6 +19,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .stats import kll_drift
 
 _EPS = 1e-6
 
@@ -74,50 +78,25 @@ def sketch_drift(
     current_sketches: DataFrame,
     n_psi_buckets: int = 20,
 ) -> DataFrame:
-    """Per-column KS + PSI computed from two t-digest sketch TABLES
-    alone (the output of operators.tdigest.tdigest_profile) — the
-    raw-data-free drift path: each snapshot persists kilobyte sketch
-    rows once, and every later cross-snapshot comparison is a join of
-    those tiny tables. At 10^12 rows the alternative (re-scanning the
-    baseline snapshot per comparison) is the dominant cost; this makes
-    drift O(columns), not O(rows).
+    """Per-column KS + PSI computed from two KLL sketch TABLES alone
+    (stats.kll_sketches output, e.g. a snapshot's `kll` artifact) —
+    the raw-data-free drift path: each snapshot persists kilobyte
+    sketch rows once, and every later cross-snapshot comparison is a
+    join of those tiny tables. At 10^12 rows the alternative
+    (re-scanning the baseline snapshot per comparison) is the dominant
+    cost; this makes drift O(columns), not O(rows).
 
-    Returns (column_name, ks, psi, n_base, n_cur). Estimate error is
-    bounded by the digests' rank error (~1e-3 at δ=200) — q72 gates
-    both statistics against exact SQL recomputation with tolerance
+    Returns (column_name, ks, psi, n_base, n_cur); ks and psi are NULL
+    when either side has no values. The evaluator is stats.kll_drift's
+    (PSI over n_psi_buckets equal-width buckets spanning both sides,
+    the same eps-smoothed formula as drift_metrics); estimate error is
+    bounded by the sketches' rank error at stats.KLL_K — q72 gates both
+    statistics against exact SQL recomputation with tolerance
     booleans.
     """
-    import pandas as pd
-
-    sk = F.struct("n", "vmin", "vmax", "means", "weights")
-    b = baseline_sketches.select("column_name", sk.alias("_base"))
-    c = current_sketches.select("column_name", sk.alias("_cur"))
-    joined = b.join(c, "column_name", "inner")
-
-    schema = "column_name string, ks double, psi double, n_base long, n_cur long"
-
-    def compute(batches):
-        from .tdigest import ks_from_sketches, psi_from_sketches
-
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                a, cu = r["_base"], r["_cur"]
-                empty = a["n"] == 0 or cu["n"] == 0
-                rows.append(
-                    {
-                        "column_name": r["column_name"],
-                        "ks": None if empty else ks_from_sketches(a, cu),
-                        "psi": None
-                        if empty
-                        else psi_from_sketches(a, cu, n_psi_buckets),
-                        "n_base": int(a["n"]),
-                        "n_cur": int(cu["n"]),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return joined.mapInPandas(compute, schema=schema)
+    return kll_drift(
+        baseline_sketches, current_sketches, psi_buckets=n_psi_buckets
+    )
 
 
 def freq_drift_tests(

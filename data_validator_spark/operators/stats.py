@@ -4,8 +4,11 @@ Generalizes the reference's validation-stats rollup
 (data_validation_pipeline.py:84-118) and vestigial IQR logic
 (validation_controller.py:12-29) into a single-pass column profile:
 null rate, min/max, HLL cardinality (`approx_count_distinct`),
-quantile sketches (`approx_percentile`), plus fixed-grid histograms
-for drift comparison.
+quantiles (`percentile_approx`, or the KLL sketch — the engine's one
+mergeable quantile-sketch family, also persisted per column by
+`kll_sketches` and compared by `kll_drift`), plus fixed-grid
+histograms for drift comparison. The sketch tables (`hll_sketches`,
+`theta_sketches`, `kll_sketches`) share one SQL-text builder.
 
 Scale notes:
   - the scalar profile is ONE Aggregate over the table (no per-column
@@ -64,24 +67,23 @@ def profile(
     buffer — tests/test_wide_schema.py pins the 1,000-column bound).
 
     quantile_method: "approx" fuses percentile_approx into the one
-    scalar Aggregate (single scan). "tdigest" runs the mergeable
-    t-digest (operators/tdigest.py) for numeric columns instead and
-    joins its read-out back on — one extra scan, but the per-snapshot
-    sketch rows it produces are persistable and mergeable, which is
-    what the raw-data-free drift path (drift.sketch_drift) consumes;
-    choose it when snapshots are profiled once and compared many
-    times."""
-    if quantile_method not in ("approx", "tdigest"):
+    scalar Aggregate. "kll" reads the quantiles of numeric columns off
+    a KLL sketch (kll_sketch_agg_double at KLL_K, the sketch family
+    kll_sketches persists) inside the same Aggregate: still one scan,
+    no join, no Python. An all-NULL (or all-NaN) numeric column gets
+    NULL quantiles."""
+    if quantile_method not in ("approx", "kll"):
         raise ValueError(f"unknown quantile_method: {quantile_method!r}")
-    use_td = quantile_method == "tdigest"
     lgk = min(21, max(4, math.ceil(2 * math.log2(1.04 / hll_rsd))))
-    qs = "array(" + ", ".join(lit(float(q)) for q in quantiles) + ")"
+    qs = _double_array(quantiles)
     structs = []
     for s in specs:
         c = ident(s.name)
         q = "CAST(NULL AS ARRAY<DOUBLE>)"
-        if s.kind == "numeric" and not use_td:
+        if s.kind == "numeric" and quantile_method == "approx":
             q = f"percentile_approx(CAST({c} AS DOUBLE), {qs}, 10000)"
+        elif s.kind == "numeric":
+            q = _kll_read(_kll_agg(c), "kll_sketch_get_quantile_double", qs)
         structs.append(
             f"named_struct('column_name', {lit(s.name)}, "
             f"'null_rate', sum(CAST({c} IS NULL AS BIGINT)) / greatest(count(1), 1), "
@@ -95,29 +97,51 @@ def profile(
     # scalar Aggregate and a generator that unpivots its row to long
     # rows, all in the plan (no collect). Built from Column objects it
     # cost a dozen Py4J round trips per column.
-    out = df.selectExpr(f"inline(array({', '.join(structs)}))")
-    if not use_td:
-        return out
-    from .tdigest import quantile_array_readout, tdigest_profile
-
-    num_cols = [s.name for s in specs if s.kind == "numeric"]
-    if not num_cols:
-        return out
-    readout = quantile_array_readout(
-        tdigest_profile(df, num_cols), quantiles
-    ).withColumnRenamed("quantiles", "_td_q")
-    return out.join(F.broadcast(readout), "column_name", "left").select(
-        "column_name",
-        "null_rate",
-        "min_val",
-        "max_val",
-        "approx_distinct",
-        F.coalesce(F.col("_td_q"), F.col("quantiles")).alias("quantiles"),
-        "n_rows",
-    )
+    return df.selectExpr(f"inline(array({', '.join(structs)}))")
 
 
 DEFAULT_HLL_LGK = 12
+
+# The engine's one quantile-sketch family is DataSketches KLL
+# (kll_sketch_agg_double): profile quantiles, KS/PSI drift, snapshot
+# artifacts and the streaming monitor all read the same sketch. KLL's
+# rank error has a worst-case bound that shrinks ~1/k, and the sketch
+# grows ~linearly in k. KLL_K is the smallest k (of 800, 1200, 1600,
+# 2000, 3000) that held every test and oracle bound with a 2x margin
+# over 20 randomized builds, twice; k=800 missed q72's PSI bound
+# (worst error 0.027 against 0.05). The measurement is in ROADMAP.md.
+KLL_K = 1200
+
+
+def _sketch_table(
+    df: DataFrame, cols: Sequence[str], fields: Sequence[tuple[str, str]]
+) -> DataFrame:
+    """(column_name, *fields): one row per column from ONE Aggregate,
+    built as one selectExpr of SQL text (profile's pattern). Each
+    field is (output name, SQL template over `{c}`, the quoted
+    column)."""
+    structs = ", ".join(
+        f"named_struct('column_name', {lit(c)}, "
+        + ", ".join(f"{lit(name)}, {tpl.format(c=ident(c))}" for name, tpl in fields)
+        + ")"
+        for c in cols
+    )
+    return df.selectExpr(f"inline(array({structs}))")
+
+
+def _kll_agg(c: str, k: int = KLL_K) -> str:
+    return f"kll_sketch_agg_double(CAST({c} AS DOUBLE), {int(k)})"
+
+
+def _kll_read(sketch: str, fn: str, arg: str) -> str:
+    """`fn(sketch, arg)` for a KLL read-out, NULL on an empty sketch:
+    Spark's quantile and rank read-outs throw on n = 0 (an all-NULL
+    or all-NaN column), which would fail every column of the query."""
+    return f"CASE WHEN kll_sketch_get_n_double({sketch}) > 0 THEN {fn}({sketch}, {arg}) END"
+
+
+def _double_array(vals: Sequence[float]) -> str:
+    return "array(" + ", ".join(lit(float(v)) for v in vals) + ")"
 
 
 def hll_sketches(
@@ -131,18 +155,9 @@ def hll_sketches(
     cardinality, newly-seen-value counts — are one hll_union away,
     JVM-side, no raw data. All values hash as strings so one sketch
     schema fits every column type."""
-    aggs = [
-        F.hll_sketch_agg(F.col(c).cast("string"), F.lit(lgk)).alias(f"{c}__sk")
-        for c in cols
-    ]
-    wide = df.agg(*aggs)
-    structs = [
-        F.struct(
-            F.lit(c).alias("column_name"), F.col(f"{c}__sk").alias("hll")
-        )
-        for c in cols
-    ]
-    return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    return _sketch_table(
+        df, cols, [("hll", f"hll_sketch_agg(CAST({{c}} AS STRING), {int(lgk)})")]
+    )
 
 
 def hll_compare(base: DataFrame, cur: DataFrame) -> DataFrame:
@@ -180,20 +195,11 @@ def theta_sketches(
     sketch retains every hash (estimates are exact); above, relative
     error ~1/sqrt(2^lgk) (~1.6% at lgk=12). Values hash as strings so
     one schema fits every key type."""
-    aggs = [
-        F.theta_sketch_agg(F.col(c).cast("string"), F.lit(lg_nom_entries)).alias(
-            f"{c}__sk"
-        )
-        for c in cols
-    ]
-    wide = df.agg(*aggs)
-    structs = [
-        F.struct(
-            F.lit(c).alias("column_name"), F.col(f"{c}__sk").alias("theta")
-        )
-        for c in cols
-    ]
-    return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    return _sketch_table(
+        df,
+        cols,
+        [("theta", f"theta_sketch_agg(CAST({{c}} AS STRING), {int(lg_nom_entries)})")],
+    )
 
 
 def theta_compare(base: DataFrame, cur: DataFrame) -> DataFrame:
@@ -224,35 +230,63 @@ def theta_compare(base: DataFrame, cur: DataFrame) -> DataFrame:
     )
 
 
-def kll_sketches(df: DataFrame, cols: Sequence[str], k: int = 800) -> DataFrame:
+def kll_sketches(df: DataFrame, cols: Sequence[str], k: int = KLL_K) -> DataFrame:
     """(column_name, n, kll binary) — native DataSketches KLL quantile
-    sketches over double-cast columns (kll_sketch_agg_double): the
-    fully JVM-side, mergeable alternative to the Python t-digest
-    (operators/tdigest.py) when only rank/quantile queries are needed.
-    k=800 keeps normalized rank error well under 1% at a few KB per
-    sketch. NULLs are excluded (Spark's agg skips them); n comes from
-    the sketch itself so the table is self-describing.
+    sketches over double-cast columns (kll_sketch_agg_double), the
+    persisted, mergeable state behind every quantile, KS and PSI
+    read-out. NULLs and NaNs are excluded (Spark's agg skips NULL, KLL
+    skips NaN; ±inf are kept); n comes from the sketch itself so the
+    table is self-describing, and n = 0 marks a column with no values.
 
     KLL compaction is randomized: re-aggregating the same rows yields
     a slightly different (still rank-error-bounded) sketch, so
     persist the table once per snapshot and compare persisted bytes —
     don't recompute per comparison."""
-    aggs = [
-        F.kll_sketch_agg_double(F.col(c).cast("double"), F.lit(k)).alias(
-            f"{c}__sk"
+    sk = _kll_agg("{c}", k)
+    return _sketch_table(
+        df, cols, [("n", f"kll_sketch_get_n_double({sk})"), ("kll", sk)]
+    )
+
+
+def kll_merge(sketches: DataFrame) -> DataFrame:
+    """(column_name, n, kll) — collapse a table of kll_sketches rows
+    (several per column: one per micro-batch, partition or shard) into
+    one merged sketch per column with kll_merge_agg_double. The merge
+    keeps KLL's rank-error bound, so partial rows can be appended
+    cheaply and merged on read; the shuffle carries sketch rows."""
+    return sketches.groupBy("column_name").agg(
+        F.expr("kll_sketch_get_n_double(kll_merge_agg_double(kll))").alias("n"),
+        F.expr("kll_merge_agg_double(kll)").alias("kll"),
+    )
+
+
+def kll_quantiles(
+    df: DataFrame,
+    col: str,
+    probs: Sequence[float],
+    group_by: Sequence[str] = (),
+) -> DataFrame:
+    """Long-format quantile estimates (group cols..., prob, estimate,
+    n) from one KLL sketch per group: the partial aggregate builds a
+    sketch per group and partition, and the shuffle carries those
+    sketches, never values. A group with no values gets NULL
+    estimates and n = 0."""
+    ps = _double_array(probs)
+    pairs = (
+        f"zip_with({ps}, coalesce("
+        + _kll_read("_sk", "kll_sketch_get_quantile_double", ps)
+        + ", CAST(array() AS ARRAY<DOUBLE>)), "
+        "(p, e) -> named_struct('prob', p, 'estimate', e))"
+    )
+    return (
+        df.groupBy(*group_by)
+        .agg(F.expr(_kll_agg(ident(col))).alias("_sk"))
+        .selectExpr(
+            *[ident(g) for g in group_by],
+            f"inline({pairs})",
+            "kll_sketch_get_n_double(_sk) AS n",
         )
-        for c in cols
-    ]
-    wide = df.agg(*aggs)
-    structs = [
-        F.struct(
-            F.lit(c).alias("column_name"),
-            F.kll_sketch_get_n_double(F.col(f"{c}__sk")).alias("n"),
-            F.col(f"{c}__sk").alias("kll"),
-        )
-        for c in cols
-    ]
-    return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    )
 
 
 def kll_drift(
@@ -260,91 +294,109 @@ def kll_drift(
     cur: DataFrame,
     n_probes: int = 128,
     chunk_cols: int = 250,
+    psi_buckets: int | None = None,
 ) -> DataFrame:
-    """KS drift from two persisted kll_sketches tables: probe values
-    are the merged sketch's quantiles at i/(n_probes+1), and
-    ks = max_i |rank_base(probe_i) − rank_cur(probe_i)|. Error is
-    bounded by grid resolution (merged CDF moves 1/(n_probes+1)
-    between probes, so each side's at most twice that) plus both
-    sketches' rank error (<1% at k=800) — q81 gates the estimate
-    against the exact window-cumsum KS with a tolerance boolean.
+    """KS (and optionally PSI) drift from two persisted kll_sketches
+    tables. Raw data is never touched. Returns (column_name, ks,
+    n_base, n_cur), with a `psi` column after ks when psi_buckets is
+    set (drift.sketch_drift). Either side empty (n = 0) gives NULL
+    statistics for that column, never an error.
+
+    KS: probe values are the merged sketch's quantiles at
+    i/(n_probes+1), and ks = max_i |rank_base(probe_i) −
+    rank_cur(probe_i)|. Error is bounded by grid resolution (merged
+    CDF moves 1/(n_probes+1) between probes, so each side's at most
+    twice that) plus both sketches' rank error — q81 gates the
+    estimate against the exact window-cumsum KS with a tolerance
+    boolean.
+
+    PSI: psi_buckets equal-width buckets over [min, max] of both
+    sides (KLL keeps the exact extremes); each side's bucket mass is a
+    difference of its ranks at the interior edges, and psi =
+    Σ (p_cur − p_base)·ln(p_cur / p_base) with each mass + 1e-6, the
+    formula of drift.drift_metrics. A column with an infinite extreme
+    has no finite grid, so its psi is NULL.
 
     Spark's KLL read-out functions (kll_sketch_get_quantile_double /
     get_rank) require FOLDABLE probe arguments, so this runs in two
     phases: phase 1 collects the per-column probe values (the sketch
     table is O(columns) kilobytes — driver-side by design, like every
-    snapshot-state read-out); phase 2 evaluates all rank gaps
-    JVM-side with the probes inlined as literals. Raw data is never
-    touched. Returns (column_name, ks, n_base, n_cur).
+    snapshot-state read-out); phase 2 evaluates every rank array
+    JVM-side with the probes inlined as array literals, then KS and
+    PSI come from those arrays in one generic projection.
 
     Wide-schema guard: the inlined literals are chunked `chunk_cols`
     columns per plan branch (branches unioned BALANCED — a linear
     unionByName chain re-analyzes the accumulated left subtree per
-    link, O(branches^2)) — a single when-chain over O(5k) columns x
-    O(100) probes would build a million-node expression tree and
-    stall analysis, while each chunked branch stays bounded no matter
-    how wide the table is. Each branch filters to its own columns, so
-    no row is evaluated twice. Each branch's CASE is built as ONE SQL
-    string handed to F.expr: composing it from Column objects costs
-    ~100 py4j driver round-trips per column (~0.1 s/column — measured
-    85 s at 1,000 columns before this), while the parser ingests the
-    same tree from text in milliseconds."""
+    link, O(branches^2)) — a single CASE over O(5k) columns x O(100)
+    probes would build a huge expression tree and stall analysis,
+    while each chunked branch stays bounded no matter how wide the
+    table is. Each branch filters to its own columns, so no row is
+    evaluated twice. Each branch is SQL text: composing it from Column
+    objects costs ~100 py4j driver round-trips per column (~0.1
+    s/column — measured 85 s at 1,000 columns), while the parser
+    ingests the same tree from text in milliseconds."""
     b = base.select(
         "column_name", F.col("n").alias("n_base"), F.col("kll").alias("_kb")
     )
     c = cur.select(
         "column_name", F.col("n").alias("n_cur"), F.col("kll").alias("_kc")
     )
-    j = b.join(c, "column_name", "inner").withColumn(
-        "_merged", F.kll_sketch_merge_double("_kb", "_kc")
-    )
-    fracs = [i / (n_probes + 1.0) for i in range(1, n_probes + 1)]
-    probe_rows = j.select(
+    j = b.join(c, "column_name", "inner")
+    # the last two ranks read the merged extremes, the PSI grid's ends
+    fracs = [i / (n_probes + 1.0) for i in range(1, n_probes + 1)] + [0.0, 1.0]
+    probe_rows = j.selectExpr(
         "column_name",
-        F.array(
-            *[
-                F.kll_sketch_get_quantile_double("_merged", F.lit(p))
-                for p in fracs
-            ]
-        ).alias("_probes"),
+        "CASE WHEN n_base > 0 AND n_cur > 0 THEN kll_sketch_get_quantile_double("
+        f"kll_sketch_merge_double(_kb, _kc), {_double_array(fracs)}) END AS _probes",
     ).collect()
     per_col = {r.column_name: r._probes for r in probe_rows}
     col_names = sorted(per_col)
 
+    def case(arms: list[str]) -> str:
+        if not arms:
+            return "CAST(NULL AS ARRAY<DOUBLE>)"
+        return "CASE column_name " + " ".join(arms) + " END"
+
+    # bucket masses: rank differences across the interior edges, with
+    # rank 0 below the first edge and 1 above the last
+    mass = "zip_with(concat({e}, array(1D)), concat(array(0D), {e}), (hi, lo) -> hi - lo + 1e-6D)"
+    stats_sql = ["array_max(zip_with(_rb, _rc, (x, y) -> abs(x - y))) AS ks"]
+    if psi_buckets:
+        stats_sql.append(
+            f"aggregate(zip_with({mass.format(e='_eb')}, {mass.format(e='_ec')}, "
+            "(pb, pc) -> (pc - pb) * ln(pc / pb)), 0D, (acc, t) -> acc + t) AS psi"
+        )
     parts: list[DataFrame] = []
-    for lo in range(0, len(col_names), max(1, chunk_cols)):
+    for lo in range(0, max(1, len(col_names)), max(1, chunk_cols)):
         chunk = col_names[lo : lo + chunk_cols]
-        arms = []
+        # rank arrays per column: _rb/_rc at the KS probes, _eb/_ec at
+        # the PSI edges, base and current side
+        arms: dict[str, list[str]] = {"_rb": [], "_rc": [], "_eb": [], "_ec": []}
         for col_name in chunk:
+            if per_col[col_name] is None:
+                continue
+            *qs, vmin, vmax = per_col[col_name]
+            rank = f"WHEN {lit(col_name)} THEN kll_sketch_get_rank_double"
             # dedup probes (repeated quantiles at heavy ties) to shrink
             # the expression; order is irrelevant under max()
-            gaps = [
-                f"abs(kll_sketch_get_rank_double(_kb, {lit(float(v))})"
-                f" - kll_sketch_get_rank_double(_kc, {lit(float(v))}))"
-                for v in sorted(set(per_col[col_name]))
-            ]
-            body = gaps[0] if len(gaps) == 1 else (
-                "greatest(" + ", ".join(gaps) + ")"
-            )
-            # backslash is an escape in Spark SQL string literals
-            esc = col_name.replace("\\", "\\\\").replace("'", "''")
-            arms.append(f"WHEN '{esc}' THEN {body}")
-        ks_sql = (
-            "CASE column_name "
-            + " ".join(arms)
-            + " ELSE CAST(NULL AS DOUBLE) END"
-        )
+            pts = _double_array(sorted(set(qs)))
+            arms["_rb"].append(f"{rank}(_kb, {pts})")
+            arms["_rc"].append(f"{rank}(_kc, {pts})")
+            if psi_buckets and math.isfinite(vmin) and math.isfinite(vmax):
+                edges = _double_array(
+                    vmin + (vmax - vmin) * i / psi_buckets
+                    for i in range(1, psi_buckets)
+                )
+                arms["_eb"].append(f"{rank}(_kb, {edges})")
+                arms["_ec"].append(f"{rank}(_kc, {edges})")
+        branch = j.filter(F.col("column_name").isin(chunk)) if chunk else j
         parts.append(
-            j.filter(F.col("column_name").isin(chunk)).select(
-                "column_name", F.expr(ks_sql).alias("ks"), "n_base", "n_cur"
+            branch.selectExpr(
+                "column_name", "n_base", "n_cur",
+                *[f"{case(a)} AS {name}" for name, a in arms.items()],
             )
-        )
-    if not parts:
-        return j.select(
-            "column_name",
-            F.lit(None).cast("double").alias("ks"),
-            "n_base",
-            "n_cur",
+            .selectExpr("column_name", *stats_sql, "n_base", "n_cur")
         )
     while len(parts) > 1:  # balanced union: O(b log b) re-analysis
         parts = [

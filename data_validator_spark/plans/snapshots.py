@@ -5,18 +5,23 @@ SNAPSHOT". At 10^12 rows the baseline must never be re-scanned per
 comparison, so a snapshot here is the set of small, mergeable summary
 tables one profiling pass produces:
 
-    profile        — null rate / min / max / HLL / t-digest quantiles
+    profile        — null rate / min / max / HLL / KLL quantiles
     histograms     — fixed-grid freqs (drift_metrics input)
-    tdigest        — raw sketch rows (sketch_drift input; mergeable,
-                     so partial snapshots can be unioned later)
+    kll            — KLL sketch rows per numeric column (sketch_drift
+                     input; mergeable with stats.kll_merge, so partial
+                     snapshots can be unioned later)
     heavy_hitters  — Misra–Gries top-k for high-cardinality columns
+    hll / theta    — cardinality and key-membership sketches
 
 Each artifact is a plain parquet directory under
 root/<snapshot_id>/<artifact>; a `_manifest` parquet carries lineage
 (snapshot id, artifact row counts, rule version, created_at) in the
 same append-only style as plans/manifest.py. Everything is
 DataFrame-sized-by-columns, so a snapshot is kilobytes regardless of
-input rows.
+input rows. The artifact directory names are the format: a snapshot
+written before the KLL sketch replaced the t-digest has a `tdigest`
+directory and no `kll` one, and reading it raises a ValueError that
+asks for a re-capture.
 
 compare() then answers drift questions from persisted state alone:
 histogram KS/PSI verdicts (drift_verdicts) joined with sketch-based
@@ -38,9 +43,14 @@ from pyspark.sql import functions as F
 
 from ..operators import drift, stats
 from ..operators.heavy_hitters import heavy_hitters
-from ..operators.tdigest import tdigest_profile
 
-ARTIFACTS = ("profile", "histograms", "tdigest", "heavy_hitters", "hll", "theta")
+ARTIFACTS = ("profile", "histograms", "kll", "heavy_hitters", "hll", "theta")
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return bool(p.getFileSystem(sc._jsc.hadoopConfiguration()).exists(p))
 
 
 @dataclass(frozen=True)
@@ -61,25 +71,26 @@ class SnapshotStore:
         key_cols: Sequence[str] = (),
     ) -> None:
         """Profile `df` once per artifact family and persist the
-        summaries. The t-digest table is written RAW (not read out),
-        so later snapshots can be compared or even merged against it.
+        summaries. The KLL sketch table is written RAW (not read
+        out), so later snapshots can be compared or even merged
+        against it.
 
         Scale shape: each artifact is an independent small write; the
-        scans stay separate on purpose — profile is one JVM Aggregate,
-        histogram/tdigest share the explode-to-long pattern, heavy
+        scans stay separate on purpose — profile and each sketch table
+        are one JVM Aggregate, histogram explodes to long rows, heavy
         hitters only visits hh_cols. Fuse by persisting `df` upstream
         if the input is not a re-readable table."""
         spark = df.sparkSession
         num_cols = [s.name for s in specs if s.kind == "numeric"]
-        stats.profile(df, specs, quantile_method="tdigest").write.mode(
+        stats.profile(df, specs, quantile_method="kll").write.mode(
             "overwrite"
         ).parquet(self._path(snapshot_id, "profile"))
         stats.histogram(df, specs).write.mode("overwrite").parquet(
             self._path(snapshot_id, "histograms")
         )
         if num_cols:
-            tdigest_profile(df, num_cols).write.mode("overwrite").parquet(
-                self._path(snapshot_id, "tdigest")
+            stats.kll_sketches(df, num_cols).write.mode("overwrite").parquet(
+                self._path(snapshot_id, "kll")
             )
         stats.hll_sketches(df, [s.name for s in specs]).write.mode(
             "overwrite"
@@ -112,7 +123,18 @@ class SnapshotStore:
     ) -> DataFrame:
         if artifact not in ARTIFACTS:
             raise ValueError(f"unknown artifact {artifact!r}")
-        return spark.read.parquet(self._path(snapshot_id, artifact))
+        path = self._path(snapshot_id, artifact)
+        if (
+            artifact == "kll"
+            and not _exists(spark, path)
+            and _exists(spark, self._path(snapshot_id, "tdigest"))
+        ):
+            raise ValueError(
+                f"snapshot {snapshot_id!r} in {self.root} has the retired "
+                "t-digest sketch format (a `tdigest` artifact, no `kll`); "
+                "re-capture it with SnapshotStore.capture to compare it"
+            )
+        return spark.read.parquet(path)
 
     def snapshots(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(f"{self.root}/_manifest")
@@ -141,8 +163,8 @@ class SnapshotStore:
             ks_fail=ks_fail,
         )
         sk = drift.sketch_drift(
-            self.read(spark, baseline_id, "tdigest"),
-            self.read(spark, current_id, "tdigest"),
+            self.read(spark, baseline_id, "kll"),
+            self.read(spark, current_id, "kll"),
         ).select(
             "column_name",
             F.col("ks").alias("sketch_ks"),
@@ -216,12 +238,7 @@ class DedupStateStore:
         return f"{self.root}/{artifact}"
 
     def exists(self, spark: SparkSession, artifact: str) -> bool:
-        jvm = spark.sparkContext._jvm
-        path = jvm.org.apache.hadoop.fs.Path(self._p(artifact))
-        fs = path.getFileSystem(
-            spark.sparkContext._jsc.hadoopConfiguration()
-        )
-        return bool(fs.exists(path))
+        return _exists(spark, self._p(artifact))
 
     def read(self, spark: SparkSession, artifact: str) -> DataFrame:
         return spark.read.parquet(self._p(artifact))

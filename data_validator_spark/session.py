@@ -93,6 +93,14 @@ def build_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # A streaming plan runs without AQE and ResolveWriteToStream WARNs
+    # so once per query; AQE stays on for batch plans, so the notice
+    # only adds noise to stderr.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark
 
 

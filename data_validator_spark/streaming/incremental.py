@@ -25,6 +25,10 @@ Semantics notes (documented, not hidden):
     batch path's job (plans/validation.py via plans/manifest.py).
   - Event-time windowed verdicts with a watermark handle late files
     (`windowed_verdicts`).
+  - The optional quality watch (`run_incremental(quality_watch=True)`)
+    keeps its distribution state as per-batch KLL sketch rows, the
+    engine's one quantile-sketch family (stats.kll_sketches), merged
+    on read; drift against a baseline is drift.sketch_drift.
 """
 
 from __future__ import annotations
@@ -184,7 +188,7 @@ def run_incremental(
     quality_watch=True composes the two standalone monitors into the
     SAME invocation (no second pass over the data):
 
-      * per batch, one t-digest partial-sketch row per watch_col
+      * per batch, one KLL partial-sketch row per watch_col
         appends under `watch/partials/batch_id=N` (the
         sketch_monitor recipe, but overwrite-per-batch so crash
         replays converge like the main outputs), and one metrics row
@@ -196,22 +200,21 @@ def run_incremental(
         out_of_control BY batch N's own monitor output) written to
         `watch/alerts/batch_id=N`, plus — when baseline_sketches is
         given — KS/PSI sketch drift of the running merged snapshot vs
-        the baseline to `watch/drift/batch_id=N`. Raw history is
-        never re-scanned: the state read back is O(columns + batches)
-        sketch/metric rows.
+        the baseline (a stats.kll_sketches table) to
+        `watch/drift/batch_id=N`; a watched column with no values in
+        the batches so far gets NULL ks/psi, not a failed query. Raw
+        history is never re-scanned: the state read back is
+        O(columns + batches) sketch/metric rows, and the partials
+        merge on read with kll_merge_agg_double.
     """
     stream = clips_stream(spark, input_path)
 
     def _watch(res, batch_id: int) -> None:
         from data_validator_spark.operators.control import manifest_monitor
         from data_validator_spark.operators.drift import sketch_drift
-        from data_validator_spark.operators.tdigest import (
-            merge_sketch_table,
-            tdigest_profile,
-        )
+        from data_validator_spark.operators.stats import kll_merge, kll_sketches
 
-        valid_side = res.validated
-        tdigest_profile(valid_side, list(watch_cols)).withColumn(
+        kll_sketches(res.validated, list(watch_cols)).withColumn(
             "batch_id", F.lit(int(batch_id)).cast("long")
         ).coalesce(1).write.mode("overwrite").parquet(
             f"{output_dir}/watch/partials/batch_id={batch_id}"
@@ -242,11 +245,7 @@ def run_incremental(
             "overwrite"
         ).parquet(f"{output_dir}/watch/alerts/batch_id={batch_id}")
         if baseline_sketches is not None:
-            merged = merge_sketch_table(
-                spark.read.parquet(f"{output_dir}/watch/partials").drop(
-                    "batch_id"
-                )
-            )
+            merged = kll_merge(spark.read.parquet(f"{output_dir}/watch/partials"))
             sketch_drift(baseline_sketches, merged).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(f"{output_dir}/watch/drift/batch_id={batch_id}")

@@ -1,24 +1,24 @@
-"""Streaming drift monitor: an appendable t-digest snapshot.
+"""Streaming drift monitor: an appendable KLL snapshot.
 
 Batch drift (plans/snapshots.py) profiles a snapshot in one pass. The
 streaming counterpart must absorb files as they land WITHOUT
 re-profiling history — which is exactly what a mergeable sketch
-buys: each micro-batch appends its own tiny partial-sketch rows to a
-state directory, and the "current snapshot" is the associative merge
-of whatever partials exist (operators.tdigest.merge_sketch_table).
-Nothing is ever rewritten, history is never re-scanned, and a killed
-job resumes from the streaming checkpoint having lost at most the
-in-flight batch.
+buys: each micro-batch appends its own tiny partial KLL sketch rows
+(stats.kll_sketches) to a state directory, and the "current snapshot"
+is the merge of whatever partials exist (stats.kll_merge, one
+kll_merge_agg_double per column). Nothing is ever rewritten, history
+is never re-scanned, and a killed job resumes from the streaming
+checkpoint having lost at most the in-flight batch.
 
 Flow:
     run_sketch_monitor(...)   readStream -> foreachBatch append of
-                              tdigest_profile partial rows (availableNow
+                              kll_sketches partial rows (availableNow
                               by default: process exactly the files
                               that arrived since the last run)
     current_sketches(...)     merged sketch per column from the state dir
     monitor_drift(...)        sketch_drift(baseline, current) — KS/PSI
                               vs any persisted baseline (e.g. a
-                              SnapshotStore tdigest artifact)
+                              SnapshotStore kll artifact)
 
 q77 gates the loop end-to-end: two arrival waves, a resume that must
 append nothing, and merged-sketch quantiles landing inside exact
@@ -39,7 +39,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..operators.drift import sketch_drift
-from ..operators.tdigest import merge_sketch_table, tdigest_profile
+from ..operators.stats import kll_merge, kll_sketches
 
 
 def run_sketch_monitor(
@@ -58,7 +58,7 @@ def run_sketch_monitor(
     stream = spark.readStream.schema(schema).parquet(in_dir)
 
     def _append(batch_df: DataFrame, batch_id: int) -> None:
-        tdigest_profile(batch_df, list(cols)).withColumn(
+        kll_sketches(batch_df, list(cols)).withColumn(
             "batch_id", F.lit(int(batch_id)).cast("long")
         ).write.mode("append").parquet(f"{state_dir}/partials")
 
@@ -71,9 +71,9 @@ def run_sketch_monitor(
 
 
 def current_sketches(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The running snapshot: one merged sketch row per column."""
-    parts = spark.read.parquet(f"{state_dir}/partials").drop("batch_id")
-    return merge_sketch_table(parts)
+    """The running snapshot: one merged (column_name, n, kll) row per
+    column."""
+    return kll_merge(spark.read.parquet(f"{state_dir}/partials"))
 
 
 def monitor_drift(

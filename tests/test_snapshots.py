@@ -43,8 +43,8 @@ def store(spark, tmp_path_factory):
 def test_artifacts_persisted_with_lineage(spark, store):
     prof = store.read(spark, "2026-01-01", "profile")
     assert {r.column_name for r in prof.collect()} == {"v", "cat"}
-    td = store.read(spark, "2026-01-01", "tdigest")
-    assert td.columns == ["column_name", "n", "vmin", "vmax", "means", "weights"]
+    kll = store.read(spark, "2026-01-01", "kll")
+    assert kll.columns == ["column_name", "n", "kll"]
     hh = store.read(spark, "2026-01-01", "heavy_hitters").collect()
     assert {r.item for r in hh} == {"a", "b"}
     man = store.snapshots(spark)
@@ -111,3 +111,23 @@ def test_theta_membership_drift(spark, store):
     assert abs(k.est_appeared - 10_000) <= 2_500
     assert abs(k.est_vanished - 10_000) <= 2_500
     assert abs(k.distinct_union - 50_000) <= 2_500
+
+
+def test_old_tdigest_snapshot_is_refused_clearly(spark, store):
+    """A snapshot captured before the KLL sketch replaced the t-digest
+    has a `tdigest` artifact and no `kll` one: reading or comparing it
+    names the snapshot and asks for a re-capture instead of failing
+    in a schema error."""
+    old = "2025-12-25"
+    spark.createDataFrame(
+        [("v", 1, 0.0, 1.0, [0.5], [1.0])],
+        "column_name string, n long, vmin double, vmax double, "
+        "means array<double>, weights array<double>",
+    ).write.parquet(f"{store.root}/{old}/tdigest")
+    store.read(spark, "2026-01-01", "histograms").write.parquet(
+        f"{store.root}/{old}/histograms"
+    )
+    with pytest.raises(ValueError, match=f"{old}.*re-capture"):
+        store.read(spark, old, "kll")
+    with pytest.raises(ValueError, match=f"{old}.*re-capture"):
+        store.compare(spark, old, "2026-01-08")

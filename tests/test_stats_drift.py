@@ -79,10 +79,8 @@ def generate_clips_meta(spark, cfg):
 
 
 def test_sketch_drift_matches_exact_ks_psi(spark):
-    """sketch_drift (t-digest tables only) vs exact numpy KS/PSI."""
+    """sketch_drift (KLL sketch tables only) vs exact numpy KS/PSI."""
     import numpy as np
-
-    from data_validator_spark.operators import tdigest as td
 
     n = 80_000
     base = spark.range(0, n, numPartitions=4).select(
@@ -96,8 +94,8 @@ def test_sketch_drift_matches_exact_ks_psi(spark):
     est = {
         r.column_name: r
         for r in drift.sketch_drift(
-            td.tdigest_profile(base, ["v_drift", "v_same"]),
-            td.tdigest_profile(cur, ["v_drift", "v_same"]),
+            stats.kll_sketches(base, ["v_drift", "v_same"]),
+            stats.kll_sketches(cur, ["v_drift", "v_same"]),
         ).collect()
     }
     assert est["v_drift"].n_base == n and est["v_drift"].n_cur == n
@@ -124,14 +122,14 @@ def test_sketch_drift_matches_exact_ks_psi(spark):
     assert est["v_same"].psi == pytest.approx(0.0, abs=0.02)
 
 
-def test_profile_tdigest_quantiles(spark, clips):
-    """profile(quantile_method='tdigest'): same schema, t-digest
-    quantile values within the rank-error contract of the approx
-    path's exact brackets."""
+def test_profile_kll_quantiles(spark, clips):
+    """profile(quantile_method='kll'): same schema, KLL quantile
+    values within the rank-error contract of the approx path's exact
+    brackets."""
     meta = clips.drop("bytes")
     td_prof = {
         r.column_name: r
-        for r in stats.profile(meta, SPECS, quantile_method="tdigest").collect()
+        for r in stats.profile(meta, SPECS, quantile_method="kll").collect()
     }
     ap_prof = {
         r.column_name: r for r in stats.profile(meta, SPECS).collect()
@@ -204,7 +202,7 @@ def test_kll_drift_tracks_exact_ks(spark, clips):
     sk_b = stats.kll_sketches(base, ["dur_ms"])
     # KLL compaction is randomized: re-aggregating the same rows gives
     # a slightly different sketch, so self-compare is bounded by rank
-    # error (<1% at k=800), not structurally zero like the t-digest.
+    # error (<1% at stats.KLL_K), not structurally zero.
     self_ks = stats.kll_drift(sk_b, sk_b).first()
     assert self_ks.ks == pytest.approx(0.0, abs=0.01)
     assert self_ks.n_base == self_ks.n_cur
@@ -250,6 +248,47 @@ def test_kll_drift_nonfinite_values_and_odd_column_names(spark):
     for name, ks in out.items():
         assert ks is not None and math.isfinite(ks), name
         assert ks == pytest.approx(0.0, abs=0.01), name
+
+
+def test_kll_drift_empty_nan_and_infinite_columns(spark):
+    """A column with no values (all NULL, or all NaN, which KLL skips)
+    on either side gets NULL ks/psi instead of failing every column
+    of the call (Spark's KLL read-outs throw on an n = 0 sketch);
+    ±inf values keep a finite ks; profile(quantile_method='kll')
+    gives an empty column NULL quantiles."""
+    inf, nan = float("inf"), float("nan")
+    rows = [(float(i), None, nan, float(i), float(i)) for i in range(30)]
+    rows += [(1.0, None, nan, -inf, inf)]
+    base = spark.createDataFrame(
+        rows, "v double, empty double, nans double, infs double, gone double"
+    )
+    cur = base.withColumn("gone", F.lit(None).cast("double"))
+    sk_b = stats.kll_sketches(base, base.columns).cache()
+    sk_c = stats.kll_sketches(cur, cur.columns)
+    self_ks = {r.column_name: r for r in stats.kll_drift(sk_b, sk_b).collect()}
+    out = {r.column_name: r for r in drift.sketch_drift(sk_b, sk_c).collect()}
+    for res in (self_ks, out):
+        assert res["empty"].ks is None and res["empty"].n_base == 0
+        assert res["nans"].ks is None and res["nans"].n_cur == 0
+        assert res["v"].ks == pytest.approx(0.0, abs=0.01)
+        assert res["infs"].ks == pytest.approx(0.0, abs=0.01)
+    assert out["gone"].ks is None and out["gone"].psi is None
+    assert (out["gone"].n_base, out["gone"].n_cur) == (31, 0)
+    assert out["empty"].psi is None and out["nans"].psi is None
+    assert out["v"].psi == pytest.approx(0.0, abs=0.01)
+    # no finite grid spans ±inf: PSI is undefined, KS is not
+    assert out["infs"].psi is None
+    prof = {
+        r.column_name: r.quantiles
+        for r in stats.profile(
+            base,
+            [stats.ColumnSpec(c, "numeric") for c in ("v", "empty", "nans")],
+            quantile_method="kll",
+        ).collect()
+    }
+    assert prof["empty"] is None and prof["nans"] is None
+    assert len(prof["v"]) == 5
+    sk_b.unpersist()
 
 
 def test_correlation_profile_values_and_single_scan(spark):

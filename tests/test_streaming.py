@@ -207,7 +207,7 @@ def test_quality_watch_flags_planted_regression(spark, tmp_path):
     monitor output must flag soft_invalid_rate out_of_control, AND the
     sketch-drift branch must fail dur_ms against the clean baseline —
     two independent alarms from persisted state alone."""
-    from data_validator_spark.operators.tdigest import tdigest_profile
+    from data_validator_spark.operators.stats import kll_sketches
     from data_validator_spark.plans import ValidationConfig
     from data_validator_spark.streaming import run_incremental
 
@@ -222,7 +222,7 @@ def test_quality_watch_flags_planted_regression(spark, tmp_path):
 
     clean_cfg = dict(n_rows=150, n_partitions=1)
     baseline_df = generate_clips(spark, ClipsConfig(seed=999, **clean_cfg))
-    baseline = tdigest_profile(baseline_df, ["dur_ms"]).cache()
+    baseline = kll_sketches(baseline_df, ["dur_ms"]).cache()
     baseline.count()
 
     n_waves = 6
