@@ -26,9 +26,19 @@ per-row analyzer. The core keeps these invariants for all of them:
     executor memory; each batch is released before the next
 
 Scale notes:
-  - decode parallelism is decoupled from file layout: callers
-    repartition before this stage (plans/validation.py uses a
-    deterministic repartition so task retries are stable).
+  - decode parallelism: one task decodes its batches, and a batch that
+    finds idle task slots on its host spreads its rows over forked
+    helpers (audio/fanout.py). Each slot is an flock'd file per host;
+    the budget is the driver's local[k] or spark.executor.cores,
+    capped by its CPU affinity. A UDF iterator holds one slot from its
+    first batch to its end, and a batch claims the other slots only
+    after it has decoded its first 32 rows in-process and only when
+    no other decode task holds one, so only a lone task fans out. The
+    output is the in-process loop's, row for row, and a failed
+    helper's rows are decoded again in-process, so the fan-out never
+    fails a task. Nothing here
+    repartitions the payload (plans/validation.py's
+    decode_partitions can, deterministically, when a caller asks).
   - per-row work is O(samples).
 """
 
@@ -43,7 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from data_validator_spark.audio import codecs, synth
+from data_validator_spark.audio import codecs, fanout, synth
 from data_validator_spark.audio.quality import (
     _FEATURE_FIELDS,
     CLIPPING_MAX_RATIO,
@@ -84,41 +94,50 @@ def make_decode_udf(
     decode_error. `plugins`/`inspectors` ride the closure to every
     python worker — the same serialization path as all user code — so
     native decoders and container inspectors plug in per call with no
-    engine edit."""
+    engine edit. A batch may run across forked helpers on idle task
+    slots (fanout.TaskSlot), with the same output row for row, so
+    `analyze` must not rely on state shared between rows."""
     schema = T.StructType(
         [T.StructField("decode_error", T.StringType())]
         + [T.StructField(name, dt) for name, dt, _ in fields]
     )
     int32 = [name for name, dt, _ in fields if isinstance(dt, T.IntegerType)]
 
+    slots = fanout.Slots()
+
+    def decode(pdf: pd.DataFrame) -> fanout.Result:
+        n = len(pdf)
+        err = np.full(n, None, dtype=object)
+        cols = {name: np.full(n, fill) for name, _, fill in fields}
+        for row in codecs.decode_rows(pdf, plugins, inspectors):
+            if row.error is not None:
+                err[row.i] = row.error
+                continue
+            try:
+                vals = analyze(row)
+                _check_int32(vals, int32)
+            except codecs.CodecError as e:  # e.g. a failed re-encode
+                err[row.i] = str(e)
+                continue
+            for name, v in vals.items():
+                cols[name][row.i] = v
+        return err, cols
+
     @pandas_udf(schema)
     def _decode_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            err = np.full(n, None, dtype=object)
-            cols = {name: np.full(n, fill) for name, _, fill in fields}
-            for row in codecs.decode_rows(pdf, plugins, inspectors):
-                if row.error is not None:
-                    err[row.i] = row.error
-                    continue
-                try:
-                    vals = analyze(row)
-                    _check_int32(vals, int32)
-                except codecs.CodecError as e:  # e.g. a failed re-encode
-                    err[row.i] = str(e)
-                    continue
-                for name, v in vals.items():
-                    cols[name][row.i] = v
-            out = {"decode_error": err}
-            for name, dt, _ in fields:
-                # nullable Int32 refuses out-of-range ints, never wraps;
-                # _check_int32 turned those rows into decode errors
-                out[name] = (
-                    pd.array(cols[name], dtype="Int32")
-                    if isinstance(dt, T.IntegerType)
-                    else cols[name]
-                )
-            yield pd.DataFrame(out)
+        with fanout.TaskSlot(slots) as task:
+            for pdf in it:
+                err, cols = task.run(pdf, decode)
+                out = {"decode_error": err}
+                for name, dt, _ in fields:
+                    # nullable Int32 refuses out-of-range ints, never
+                    # wraps; _check_int32 made those rows decode errors
+                    out[name] = (
+                        pd.array(cols[name], dtype="Int32")
+                        if isinstance(dt, T.IntegerType)
+                        else cols[name]
+                    )
+                yield pd.DataFrame(out)
 
     return _decode_udf
 

@@ -18,6 +18,7 @@ as parquet, append-only, latest-row-wins per (partition, rule_version).
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -103,6 +104,13 @@ class CheckpointManifest:
         )
 
     def record(self, verdicts_with_fp: DataFrame) -> None:
+        # validated_at joins in as data, a one-row VALUES relation: a
+        # current_timestamp() folds to a literal that codegen inlines,
+        # so every commit compiled a new class
+        now = verdicts_with_fp.sparkSession.sql(
+            f"SELECT * FROM VALUES (timestamp_micros({time.time_ns() // 1000})) "
+            "AS t(validated_at)"
+        )
         (
             verdicts_with_fp.select(
                 "partition_value",
@@ -113,8 +121,8 @@ class CheckpointManifest:
                 "n_soft_invalid",
                 "n_hard_invalid",
                 "n_warnings",
-                F.current_timestamp().alias("validated_at"),
             )
+            .crossJoin(now)
             .coalesce(1)
             .write.mode("append")
             .parquet(self.path)

@@ -43,9 +43,9 @@ def test_job_runs_and_resumes(spark, fixture_paths, tmp_path, capsys, monkeypatc
     assert r2 == {"status": "up_to_date", "partitions": 0}
 
     # the same op again into a fresh output dir and manifest: a warm op
-    # compiles no whole-stage class outside the manifest commit, whose
-    # `current_timestamp()` literal is new generated code every run
-    # (Spark's codegen cache holds the plans' classes: session.py)
+    # compiles no whole-stage class, in the manifest commit or outside
+    # it (Spark's codegen cache holds the plans' classes: session.py;
+    # the commit's validated_at is data, not an inlined literal)
     commit = []
     record = CheckpointManifest.record
 
@@ -63,7 +63,7 @@ def test_job_runs_and_resumes(spark, fixture_paths, tmp_path, capsys, monkeypatc
     assert r3 == {**r1, "wall_sec": r3["wall_sec"]}
     assert len(commit) == 1
     assert n1 - n0 - commit[0] == 0, (n1 - n0, ms1 - ms0)
-    assert commit[0] <= 2
+    assert commit[0] == 0
 
 
 def test_engine_conf_fills_only_what_spark_submit_left_unset():
