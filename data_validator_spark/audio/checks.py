@@ -26,18 +26,18 @@ per-row analyzer. The core keeps these invariants for all of them:
     executor memory; each batch is released before the next
 
 Scale notes:
-  - decode parallelism: one task decodes its batches, and a batch that
-    finds idle task slots on its host spreads its rows over forked
-    helpers (audio/fanout.py). Each slot is an flock'd file per host;
-    the budget is the driver's local[k] or spark.executor.cores,
-    capped by its CPU affinity. A UDF iterator holds one slot from its
-    first batch to its end, and a batch claims the other slots only
-    after it has decoded its first 32 rows in-process and only when
-    no other decode task holds one, so only a lone task fans out. The
-    output is the in-process loop's, row for row, and a failed
-    helper's rows are decoded again in-process, so the fan-out never
-    fails a task. Nothing here
-    repartitions the payload (plans/validation.py's
+  - decode parallelism: one task decodes its batches, and a batch of
+    a task that runs alone on its host spreads its rows over forked
+    helpers (audio/fanout.py). Every decode task holds a shared lock
+    on one gate file per host from its first batch to its end; a
+    batch fans out only after it has decoded its first 32 rows
+    in-process and only when it can take that lock exclusively, so a
+    stage with a task per core never oversubscribes. The width is the
+    driver's local[k] (local-cluster: executors x cores) or
+    spark.executor.cores, capped by its CPU affinity. The output is
+    the in-process loop's, row for row, and a failed helper's rows
+    are decoded again in-process, so the fan-out never fails a task.
+    Nothing here repartitions the payload (plans/validation.py's
     decode_partitions can, deterministically, when a caller asks).
   - per-row work is O(samples).
 """
@@ -94,8 +94,8 @@ def make_decode_udf(
     decode_error. `plugins`/`inspectors` ride the closure to every
     python worker — the same serialization path as all user code — so
     native decoders and container inspectors plug in per call with no
-    engine edit. A batch may run across forked helpers on idle task
-    slots (fanout.TaskSlot), with the same output row for row, so
+    engine edit. A batch may run across forked helpers on idle cores
+    (fanout.Task), with the same output row for row, so
     `analyze` must not rely on state shared between rows."""
     schema = T.StructType(
         [T.StructField("decode_error", T.StringType())]
@@ -103,7 +103,7 @@ def make_decode_udf(
     )
     int32 = [name for name, dt, _ in fields if isinstance(dt, T.IntegerType)]
 
-    slots = fanout.Slots()
+    host = fanout.Host()
 
     def decode(pdf: pd.DataFrame) -> fanout.Result:
         n = len(pdf)
@@ -125,7 +125,7 @@ def make_decode_udf(
 
     @pandas_udf(schema)
     def _decode_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        with fanout.TaskSlot(slots) as task:
+        with fanout.Task(host) as task:
             for pdf in it:
                 err, cols = task.run(pdf, decode)
                 out = {"decode_error": err}

@@ -1,5 +1,5 @@
 """Decode fan-out: one Arrow batch of a decode UDF spread over the
-host's idle task slots.
+host's idle cores.
 
 The per-row decode and analysis is GIL-bound (four threads on one
 batch ran it only ~25% faster), so a second core on one batch needs a
@@ -7,38 +7,36 @@ second process. The plan-shape contract (the payload is never shuffled
 and read once) rules out splitting a batch across Spark tasks, so a
 batch forks its helpers inside its own task:
 
-  - slots: a host has `budget` task slots, one fcntl.flock'd file each
-    in a per-user directory under the temp dir. The kernel frees a
-    lock when the last process holding it dies, so a killed worker
-    never leaks a slot.
   - budget: the driver resolves it when it pickles the UDF: local[k]
     -> k (local -> 1, local[*] -> the cores), local-cluster[n,c,m] ->
-    c, otherwise spark.executor.cores (unset: no fan-out), capped by
-    the driver's os.sched_getaffinity. A UDF body that was never
-    pickled (called directly, without Spark) never forks.
-  - own slot: a UDF iterator holds one slot from its first batch to its
-    end. One that finds none free (more tasks than slots) never fans
-    out. Holding it across batches keeps a task that is between two
-    batches from leaving its core to a sibling's helpers.
-  - extra slots: a batch decodes its first HEAD_ROWS rows in-process,
-    then claims every other slot. It fans out only when it gets them
-    all, that is when no other decode task runs on the host: a
-    partial fan-out beside running siblings took the slot of a sibling
-    whose first batch came a few hundred ms late, which then ran
-    without one, so five processes shared four cores for a whole
-    stage. The batch keeps one slot per helper (at most one per
-    MIN_SHARE rows left), releases the rest, and forks. Each process
-    decodes a share of the rest, dealt round-robin by codec and
-    payload size; the parent scatters the shares back by row
-    position, so the output equals the in-process loop's, row for
-    row. The extra slots go back when the batch ends. So only a lone
-    task fans out: a job's one pending partition, or the last task of
-    a stage.
+    n*c (all its executors share the host), otherwise
+    spark.executor.cores (unset: no fan-out), capped by the driver's
+    os.sched_getaffinity. A UDF body that was never pickled (called
+    directly, without Spark) never forks.
+  - gate: every decode task on a host holds a shared fcntl lock on one
+    gate file (per user, under the temp dir) from its first batch to
+    its end, so no decode task runs unseen. A batch decodes its first
+    HEAD_ROWS rows in-process, then tries to turn its lock exclusive;
+    that succeeds only when no other decode task holds the gate, and a
+    failed try leaves the shared lock in place (POSIX lock conversion
+    is atomic). So only a lone task fans out: a job's one pending
+    partition, or the last task of a stage; a stage with a task per
+    core never oversubscribes. A task that starts while a batch holds
+    the gate exclusively waits for that batch to end. The kernel drops
+    a lock when its process dies, so a killed worker never blocks the
+    host. fcntl locks belong to the process, so a process runs at most
+    one decode iterator at a time (pyspark runs one per worker).
+  - width: min(budget, rows left / MIN_SHARE) processes. Process j
+    decodes rows head + j, head + j + width, ...; the parent scatters
+    the shares back by row position, so the output equals the
+    in-process loop's, row for row. The lock turns shared again when
+    the batch ends.
   - helpers: die with their parent (PR_SET_PDEATHSIG), end with
     os._exit, so they never run exit handlers or flush the JVM socket
     buffer they inherit, and return their arrays pickled over a pipe.
-    A helper that fails in any way (killed, raised, short payload)
-    costs only time: the parent decodes its rows in-process.
+    A helper that fails in any way (could not be forked, killed,
+    raised, cut-off result, no result within the wait) costs only
+    time: the parent decodes its rows in-process.
 """
 
 from __future__ import annotations
@@ -49,9 +47,11 @@ import fcntl
 import os
 import pickle
 import re
+import select
 import signal
 import sys
 import tempfile
+import time
 from typing import Callable
 
 import numpy as np
@@ -59,6 +59,10 @@ import pandas as pd
 
 HEAD_ROWS = 32
 MIN_SHARE = 16
+# a helper gets WAIT_FACTOR times the parent's own share time, at least
+# WAIT_MIN_S, to return its result; then it is killed
+WAIT_FACTOR = 4.0
+WAIT_MIN_S = 10.0
 
 # (decode_error, {field: values}) for the rows of one share
 Result = tuple[np.ndarray, dict]
@@ -66,12 +70,12 @@ Decode = Callable[[pd.DataFrame], Result]
 
 _PR_SET_PDEATHSIG = 1
 _LINUX = sys.platform.startswith("linux")
-_LOCAL: Slots | None = None
+_LOCAL: Host | None = None
 
 
 def driver_budget() -> int | None:
-    """Task slots per host for the active SparkContext (see module
-    docstring); None when there is no context or fewer than 2."""
+    """Decode processes per host for the active SparkContext (see
+    module docstring); None when there is no context or fewer than 2."""
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
@@ -80,136 +84,128 @@ def driver_budget() -> int | None:
     master = sc.master
     if m := re.fullmatch(r"local(?:\[(\d+|\*)(?:,\s*\d+)?\])?", master):
         k = (os.cpu_count() or 1) if m[1] == "*" else int(m[1] or 1)
-    elif m := re.fullmatch(r"local-cluster\[\s*\d+\s*,\s*(\d+)\s*,\s*\d+\s*\]", master):
-        k = int(m[1])
+    elif m := re.fullmatch(r"local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,\s*\d+\s*\]", master):
+        k = int(m[1]) * int(m[2])
     else:
         k = int(sc.getConf().get("spark.executor.cores", "0"))
     k = min(k, len(os.sched_getaffinity(0)))
     return k if k > 1 else None
 
 
-class Slots:
-    """The task slots one decode UDF may use. Pickling resolves the
-    budget on the driver, so every worker gets the driver's view."""
+class Host:
+    """The budget and gate file one decode UDF uses. Pickling resolves
+    the budget on the driver, so every worker gets the driver's view."""
 
-    def __init__(self, budget: int | None = None, directory: str | None = None):
+    def __init__(self, budget: int | None = None, gate: str | None = None):
         self.budget = budget
-        self.directory = directory
+        self.gate = gate
 
     def __getstate__(self) -> dict:
         budget = self.budget if self.budget is not None else driver_budget()
-        return {"budget": budget, "directory": self.directory}
+        return {"budget": budget, "gate": self.gate}
 
-    def resolved(self) -> Slots:
-        """The slots a worker uses: its own, or those `local_slots`
+    def resolved(self) -> Host:
+        """The host a worker uses: its own, or the one `local_host`
         sets for a never-pickled UDF body."""
         if self.budget is None and _LOCAL is not None:
             return _LOCAL
         return self
 
-    def claim(self, n: int) -> list[int]:
-        """Lock up to n free slot files; their fds hold the locks."""
-        if not self.budget or n < 1 or not _LINUX:
-            return []
-        d = self.directory or os.path.join(
-            tempfile.gettempdir(), f"dvs-decode-slots-{os.getuid()}"
-        )
-        os.makedirs(d, exist_ok=True)
-        fds: list[int] = []
-        for i in range(self.budget):
-            fd = os.open(os.path.join(d, f"slot{i}"), os.O_RDWR | os.O_CREAT, 0o666)
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            except BlockingIOError:
-                os.close(fd)
-                continue
-            fds.append(fd)
-            if len(fds) == n:
-                break
-        return fds
+    def gate_path(self) -> str:
+        return self.gate or os.path.join(tempfile.gettempdir(), f"dvs-decode-gate-{os.getuid()}")
 
 
 @contextlib.contextmanager
-def local_slots(budget: int, directory: str):
-    """Give never-pickled UDF bodies in this process `budget` slots
-    under `directory` (Spark-free tests; no public knob)."""
+def local_host(budget: int, gate: str):
+    """Give never-pickled UDF bodies in this process `budget` and the
+    gate file `gate` (Spark-free tests; no public knob)."""
     global _LOCAL
-    old, _LOCAL = _LOCAL, Slots(budget, directory)
+    old, _LOCAL = _LOCAL, Host(budget, gate)
     try:
         yield
     finally:
         _LOCAL = old
 
 
-class TaskSlot:
-    """One UDF iterator's view: its own slot, held from the first batch
-    to the end, and `run` to decode one batch across free slots."""
+class Task:
+    """One UDF iterator's view: its shared hold on the gate, from the
+    first batch to the end, and `run` to decode one batch."""
 
-    def __init__(self, slots: Slots):
-        self.slots = slots.resolved()
+    def __init__(self, host: Host):
+        self.host = host.resolved()
+        self.fd: int | None = None
 
-    def __enter__(self) -> TaskSlot:
-        self.own = self.slots.claim(1)
+    def __enter__(self) -> Task:
+        if (self.host.budget or 1) > 1 and _LINUX:
+            fd = None
+            try:
+                fd = os.open(self.host.gate_path(), os.O_RDWR | os.O_CREAT, 0o666)
+                fcntl.lockf(fd, fcntl.LOCK_SH)  # waits while a batch fans out
+                self.fd = fd
+            except OSError:  # no gate (read-only temp dir, no locks): no fan-out
+                if fd is not None:
+                    os.close(fd)
         return self
 
     def __exit__(self, *exc) -> None:
-        for fd in self.own:
-            os.close(fd)
+        if self.fd is not None:
+            os.close(self.fd)
 
     def run(self, pdf: pd.DataFrame, decode: Decode) -> Result:
         n = len(pdf)
-        if not self.own or n < HEAD_ROWS + 2 * MIN_SHARE:
+        width = min(self.host.budget or 1, (n - HEAD_ROWS) // MIN_SHARE)
+        if self.fd is None or width < 2:
             return decode(pdf)
-        head = HEAD_ROWS
-        parts = [(np.arange(head), decode(pdf.iloc[:head]))]
-        extra = self.slots.claim(self.slots.budget - 1)
-        keep = min(self.slots.budget, (n - head) // MIN_SHARE) - 1
-        if len(extra) < self.slots.budget - 1:  # a sibling task holds a slot
-            keep = 0
-        for fd in extra[keep:]:
-            os.close(fd)
-        extra = extra[:keep]
-        if not extra:
-            parts.append((np.arange(head, n), decode(pdf.iloc[head:])))
-            return _merge(n, parts)
-        helpers: list[tuple[np.ndarray, int, int]] = []
+        parts = [(np.arange(HEAD_ROWS), decode(pdf.iloc[:HEAD_ROWS]))]
         try:
-            shares = _shares(head, pdf, 1 + len(extra))
-            for rows in shares[1:]:
-                helpers.append((rows, *_fork(pdf.iloc[rows], decode)))
-            parts.append((shares[0], decode(pdf.iloc[shares[0]])))
-            while helpers:
-                rows, pid, r = helpers.pop(0)
-                got = _collect(pid, r)
-                parts.append((rows, got if got is not None else decode(pdf.iloc[rows])))
+            fcntl.lockf(self.fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except OSError:  # another decode task holds the gate
+            parts.append((np.arange(HEAD_ROWS, n), decode(pdf.iloc[HEAD_ROWS:])))
+            return _merge(n, parts)
+        try:
+            parts += _fan_out(pdf, decode, width)
         finally:
-            for _, pid, r in helpers:  # only when the parent raised
-                os.kill(pid, signal.SIGKILL)
-                os.close(r)
-                _reap(pid)
-            for fd in extra:
-                os.close(fd)
+            fcntl.lockf(self.fd, fcntl.LOCK_SH)
         return _merge(n, parts)
 
 
-def _shares(head: int, pdf: pd.DataFrame, width: int) -> list[np.ndarray]:
-    """Row positions of [head, n) per process, the parent's first: the
-    rows are dealt round-robin in (codec, payload size) order, so every
-    share gets its part of each codec (a FLAC row costs several pcm16
-    rows) and of the long clips. Every process starts after the head,
-    so the tail splits evenly."""
-    tail = pdf.iloc[head:]
-    size = np.fromiter((len(b) if b is not None else 0 for b in tail["bytes"]), np.int64, len(tail))
-    order = head + np.lexsort((size, pd.factorize(tail["codec"])[0]))
-    return [np.sort(order[j::width]) for j in range(width)]
+def _fan_out(pdf: pd.DataFrame, decode: Decode, width: int) -> list[tuple[np.ndarray, Result]]:
+    """Decode rows [HEAD_ROWS, n) over the parent and width - 1 helpers."""
+    shares = [HEAD_ROWS + np.arange(len(pdf) - HEAD_ROWS)[j::width] for j in range(width)]
+    helpers: list[tuple[np.ndarray, tuple[int, int] | None]] = []
+    try:
+        for rows in shares[1:]:
+            helpers.append((rows, _fork(pdf.iloc[rows], decode)))
+        t0 = time.monotonic()
+        parts = [(shares[0], decode(pdf.iloc[shares[0]]))]
+        deadline = time.monotonic() + max(WAIT_MIN_S, WAIT_FACTOR * (time.monotonic() - t0))
+        while helpers:
+            rows, helper = helpers.pop(0)
+            got = _collect(*helper, deadline) if helper else None
+            parts.append((rows, got if got is not None else decode(pdf.iloc[rows])))
+        return parts
+    finally:
+        for _, helper in helpers:  # only when the parent raised
+            if helper:
+                os.kill(helper[0], signal.SIGKILL)
+                os.close(helper[1])
+                _reap(helper[0])
 
 
-def _fork(pdf: pd.DataFrame, decode: Decode) -> tuple[int, int]:
+def _fork(pdf: pd.DataFrame, decode: Decode) -> tuple[int, int] | None:
     """Fork a helper that decodes `pdf` and writes the pickled result
-    to a pipe: (pid, read end)."""
+    to a pipe: (pid, read end), or None when no helper could start."""
     parent = os.getpid()
-    r, w = os.pipe()
-    pid = os.fork()
+    try:
+        r, w = os.pipe()
+    except OSError:  # EMFILE/ENFILE
+        return None
+    try:
+        pid = os.fork()
+    except OSError:  # EAGAIN under a pids limit, ENOMEM
+        os.close(r)
+        os.close(w)
+        return None
     if pid:
         os.close(w)
         return pid, r
@@ -226,22 +222,41 @@ def _fork(pdf: pd.DataFrame, decode: Decode) -> tuple[int, int]:
         os._exit(code)
 
 
-def _collect(pid: int, r: int) -> Result | None:
-    """A helper's result, or None when it failed in any way."""
-    with open(r, "rb") as f:
-        data = f.read()
-    _reap(pid)
+def _collect(pid: int, r: int, deadline: float) -> Result | None:
+    """A helper's result, or None when it failed in any way or sent no
+    end of file by `deadline` (time.monotonic); it is reaped either
+    way."""
+    poll = select.poll()
+    poll.register(r, select.POLLIN)
+    chunks: list[bytes] = []
+    ok = False
     try:
-        return pickle.loads(data)
-    except (EOFError, pickle.UnpicklingError):  # no or a cut-off result
+        while True:
+            left = deadline - time.monotonic()
+            if left <= 0 or not poll.poll(left * 1000):
+                os.kill(pid, signal.SIGKILL)  # hung: its rows go in-process
+                break
+            chunk = os.read(r, 1 << 20)
+            if not chunk:
+                ok = True
+                break
+            chunks.append(chunk)
+    finally:
+        os.close(r)
+        ok = _reap(pid) and ok
+    try:
+        return pickle.loads(b"".join(chunks)) if ok else None
+    except (EOFError, pickle.UnpicklingError):  # cut off, status lost
         return None
 
 
-def _reap(pid: int) -> None:
+def _reap(pid: int) -> bool:
+    """Wait for a helper; False unless it exited with code 0."""
     try:
-        os.waitpid(pid, 0)
-    except ChildProcessError:  # SIGCHLD ignored: already reaped
-        pass
+        _, status = os.waitpid(pid, 0)
+    except ChildProcessError:  # SIGCHLD ignored: reaped, status lost
+        return True
+    return os.waitstatus_to_exitcode(status) == 0
 
 
 def _merge(n: int, parts: list[tuple[np.ndarray, Result]]) -> Result:

@@ -1,18 +1,19 @@
 """Contract of the decode fan-out (audio/fanout.py), Spark-free: a batch
 spread over forked helpers equals the in-process batch row for row,
-a failed helper costs only time, and the slot files decide the width.
-The UDF bodies get their slots from `fanout.local_slots`; forks are
-counted through a wrapped `os.fork`."""
+a failed helper costs only time, and the host's gate file lets only a
+lone decode task fan out. The UDF bodies get their budget and gate
+from `fanout.local_host`; forks are counted through a wrapped
+`os.fork`."""
 
 from __future__ import annotations
 
+import errno
 import os
 import signal
 import subprocess
 import sys
 import time
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import types as T
@@ -135,7 +136,7 @@ def test_fanned_out_batch_equals_in_process_batch(name, tmp_path, forks):
     assert ref["decode_error"].notna().sum() >= 15  # hostile rows are in
     for width in (1, 2, 3, 4):
         del forks[:]
-        with fanout.local_slots(width, str(tmp_path / f"w{width}")):
+        with fanout.local_host(width, str(tmp_path / "gate")):
             got = _run(udf, pdf)
         assert len(forks) == width - 1, (width, forks)
         _same(got, ref)
@@ -146,7 +147,7 @@ def test_check_fields_survive_the_pipe(tmp_path):
     """The rows the contract names keep their exact outcome when a
     helper decodes them."""
     pdf = _batch()
-    with fanout.local_slots(4, str(tmp_path)):
+    with fanout.local_host(4, str(tmp_path / "gate")):
         out = _run(make_audio_check_udf(PLUGINS), pdf)
     by = dict(zip(pdf["clip_id"], out.to_dict("records")))
     for k in range(3):
@@ -159,15 +160,21 @@ def test_check_fields_survive_the_pipe(tmp_path):
     assert by["ok5"]["container_sr"] == SR and by["ok5"]["snr_db"] > 30
 
 
-def _failing_udf(how: str):
+FAIL_ROWS = ("ok42", "ok81")  # in the shares of helpers 2 and 1 at width 4
+
+
+def _failing_udf(how: str, marks):
     """A decode UDF whose analyzer fails in a helper (never in the
-    parent) on the rows marked `ok7` and `ok90`."""
+    parent) on FAIL_ROWS, leaving a file in `marks` for each."""
     parent = os.getpid()
 
     def analyze(row):
-        if os.getpid() != parent and row.clip_id in ("ok7", "ok90"):
+        if os.getpid() != parent and row.clip_id in FAIL_ROWS:
+            (marks / row.clip_id).touch()
             if how == "kill":
                 os.kill(os.getpid(), signal.SIGKILL)
+            if how == "hang":
+                time.sleep(120)
             raise ValueError("helper bug")
         return {"n": len(row.pcm), "sr": row.sr}
 
@@ -175,17 +182,42 @@ def _failing_udf(how: str):
     return make_decode_udf(fields, analyze, PLUGINS)
 
 
-@pytest.mark.parametrize("how", ["kill", "raise"])
-def test_failed_helper_rows_are_recomputed(how, tmp_path, forks):
+@pytest.mark.parametrize("how", ["kill", "raise", "hang"])
+def test_failed_helper_rows_are_recomputed(how, tmp_path, forks, monkeypatch):
+    monkeypatch.setattr(fanout, "WAIT_MIN_S", 1.0)  # a hung helper is killed after ~1 s
     pdf = _batch()
-    udf = _failing_udf(how)
+    udf = _failing_udf(how, tmp_path)
     ref = _run(udf, pdf)
-    with fanout.local_slots(4, str(tmp_path)):
+    t0 = time.monotonic()
+    with fanout.local_host(4, str(tmp_path / "gate")):
         got = _run(udf, pdf)
+    assert time.monotonic() - t0 < 60
     assert len(forks) == 3
+    assert sorted(p.name for p in tmp_path.glob("ok*")) == list(FAIL_ROWS)
     _same(got, ref)
     assert (got["n"] == N).sum() == len(pdf) - 24
     _no_helper_left(forks)
+
+
+@pytest.mark.parametrize("call", ["fork", "pipe"])
+def test_helpers_that_cannot_start_cost_only_time(call, tmp_path, monkeypatch):
+    """os.fork (EAGAIN under a pids limit) or os.pipe (EMFILE) failing
+    leaves the batch to the parent, never fails it."""
+    pdf = _batch()
+    udf = make_audio_check_udf(PLUGINS)
+    ref = _run(udf, pdf)
+    calls = []
+
+    def refuse(*args):
+        calls.append(call)
+        raise OSError(errno.EAGAIN if call == "fork" else errno.EMFILE, call)
+
+    monkeypatch.setattr(os, call, refuse)
+    with fanout.local_host(4, str(tmp_path / "gate")):
+        got = _run(udf, pdf)
+    assert len(calls) == 3
+    _same(got, ref)
+    _no_helper_left([])
 
 
 _ORPHAN_SCRIPT = """
@@ -205,7 +237,7 @@ def analyze(row):
     return {{"n": len(row.pcm)}}
 
 udf = make_decode_udf([("n", T.LongType(), -1)], analyze)
-with fanout.local_slots(4, os.path.join(out, "slots")):
+with fanout.local_host(4, os.path.join(out, "gate")):
     list(udf.func(iter([_batch()])))
 """
 
@@ -243,82 +275,97 @@ def test_no_helper_outlives_a_killed_parent(tmp_path):
     assert not left, helpers
 
 
-def _hold(directory, slots) -> list[int]:
-    """Lock these slot files from this process (a separate open file
-    description, so the UDF's own attempts conflict with it)."""
-    import fcntl
+_DECODER_SCRIPT = """
+import os, sys, time
+from pyspark.sql import types as T
+from data_validator_spark.audio import fanout
+from data_validator_spark.audio.checks import make_decode_udf
+sys.path.insert(0, {tests!r})
+from test_decode_fanout import _batch
 
-    os.makedirs(directory, exist_ok=True)
-    fds = []
-    for i in slots:
-        fd = os.open(os.path.join(directory, f"slot{i}"), os.O_RDWR | os.O_CREAT)
-        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        fds.append(fd)
-    return fds
+def analyze(row):
+    print("decoding", flush=True)
+    time.sleep(120)
+
+udf = make_decode_udf([("n", T.LongType(), -1)], analyze)
+with fanout.local_host(4, {gate!r}):
+    list(udf.func(iter([_batch()])))
+"""
+
+_EXCLUSIVE_SCRIPT = """
+import fcntl, os, sys, time
+fd = os.open({gate!r}, os.O_RDWR | os.O_CREAT)
+fcntl.lockf(fd, fcntl.LOCK_EX)
+print("held", flush=True)
+time.sleep(0.5)
+print(time.monotonic(), flush=True)
+fcntl.lockf(fd, fcntl.LOCK_UN)
+sys.stdin.read()
+"""
 
 
-def test_slot_policy(tmp_path, forks):
-    d = str(tmp_path / "slots")
-    udf = make_decode_udf([("n", T.LongType(), -1)], lambda row: {"n": len(row.pcm)})
+def _start(script: str) -> subprocess.Popen:
+    return subprocess.Popen(
+        [sys.executable, "-c", script],
+        cwd=REPO,
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+
+
+def _stop(proc: subprocess.Popen) -> None:
+    proc.kill()
+    proc.wait()
+    proc.stdin.close()
+    proc.stdout.close()
+
+
+def test_gate_policy(tmp_path, forks):
+    gate = str(tmp_path / "gate")
+    parent, first = os.getpid(), []
+
+    def analyze(row):
+        if os.getpid() == parent and not first:
+            first.append(time.monotonic())
+        return {"n": len(row.pcm)}
+
+    udf = make_decode_udf([("n", T.LongType(), -1)], analyze)
     pdf = _batch()
     ref = _run(udf, pdf)
 
-    # every slot held elsewhere: the iterator gets no slot, forks nothing
-    held = _hold(d, range(4))
-    with fanout.local_slots(4, d):
-        _same(_run(udf, pdf), ref)
-    assert forks == []
-    # two free: the iterator takes one, but the slots still held mean
-    # sibling tasks are decoding, so the batch stays in-process
-    os.close(held.pop())
-    os.close(held.pop())
-    with fanout.local_slots(4, d):
-        _same(_run(udf, pdf), ref)
-    assert forks == []
-    # a lone task (no slot held by another) with one slot free besides
-    # its own runs at width 2
-    for fd in held:
-        os.close(fd)
-    with fanout.local_slots(2, d):
-        _same(_run(udf, pdf), ref)
-    assert len(forks) == 1
-
-    # a lock whose holder exited is free again
-    hold = (
-        "import fcntl, os, sys\n"
-        f"fds = [os.open(os.path.join({d!r}, f'slot{{i}}'), os.O_RDWR) for i in range(4)]\n"
-        "[fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB) for fd in fds]\n"
-        "print('held', flush=True)\n"
-        "sys.stdin.read()\n"
-    )
-    holder = subprocess.Popen(
-        [sys.executable, "-c", hold], stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True
-    )
-    assert holder.stdout.readline() == "held\n"
-    del forks[:]
-    with fanout.local_slots(4, d):
-        _run(udf, pdf)
-    assert forks == []
-    holder.kill()
-    holder.wait()
-    holder.stdin.close()
-    holder.stdout.close()
-    with fanout.local_slots(4, d):
+    # another process is decoding (it holds the gate shared, stuck in
+    # its head rows): this batch sees it and forks nothing
+    other = _start(_DECODER_SCRIPT.format(tests=os.path.join(REPO, "tests"), gate=gate))
+    try:
+        assert other.stdout.readline() == "decoding\n"
+        with fanout.local_host(4, gate):
+            _same(_run(udf, pdf), ref)
+        assert forks == []
+    finally:
+        _stop(other)
+    # its lock died with it: a lone task fans out to the budget
+    with fanout.local_host(4, gate):
         _same(_run(udf, pdf), ref)
     assert len(forks) == 3
+    # a budget of 2 runs at width 2
+    del forks[:]
+    with fanout.local_host(2, gate):
+        _same(_run(udf, pdf), ref)
+    assert len(forks) == 1
     _no_helper_left(forks)
 
-
-def test_shares_split_the_tail_evenly_by_codec_and_size():
-    codec = (["flac", "pcm16", "pcm16", None] * 200)[:500]
-    size = [i % 7 * 1000 for i in range(500)]
-    pdf = pd.DataFrame({"codec": codec, "bytes": [b"x" * s if s else None for s in size]})
-    for n, width in ((110, 2), (110, 4), (500, 4), (40, 3)):
-        shares = fanout._shares(fanout.HEAD_ROWS, pdf.iloc[:n], width)
-        rows = np.sort(np.concatenate(shares))
-        assert list(rows) == list(range(fanout.HEAD_ROWS, n))
-        for c in ("flac", "pcm16", None):
-            per_share = [sum(pdf["codec"].iloc[s].isna() if c is None else pdf["codec"].iloc[s] == c) for s in shares]
-            assert max(per_share) - min(per_share) <= 1, (n, width, c, per_share)
-        total = [sum(size[i] for i in s) for s in shares]
-        assert max(total) - min(total) <= 6000 * len(set(codec)), (n, width, total)
+    # a task that starts while a batch holds the gate exclusively waits
+    # for it, then runs alone
+    holder = _start(_EXCLUSIVE_SCRIPT.format(gate=gate))
+    try:
+        assert holder.stdout.readline() == "held\n"
+        del forks[:], first[:]
+        with fanout.local_host(4, gate):
+            _same(_run(udf, pdf), ref)
+        released = float(holder.stdout.readline())
+    finally:
+        _stop(holder)
+    assert first[0] >= released
+    assert len(forks) == 3
+    _no_helper_left(forks)
